@@ -4,9 +4,11 @@ import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import graft.core.Crawl
-import graft.frontier.{BloomSeen, FrontierEntry, ShardedBloom, Snapshots, TieredFrontier}
+import graft.frontier.{ShardedBloom, Snapshots, TieredFrontier}
 import graft.round.CrawlRound
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The driver-side fixpoint loop replacing the reference's Twisted reactor
   * (SURVEY.md §3.1 step 4): bounded iterative BFS = batch rounds with a
@@ -45,120 +47,14 @@ object CrawlLoop {
           robots: Map[String, Vector[String]] = Map.empty): CrawlSummary = {
     import spark.implicits._
 
-    val headCap = cfg.perHostBudget * TieredFrontier.HeadFactor
-
-    val startRound: Int = Snapshots.latestCommittedRound(warehouse) match {
+    var round = Snapshots.latestCommittedRound(warehouse) match {
       case Some(r) if resume => r + 1
       case Some(_) =>
         sys.error(s"warehouse $warehouse already has snapshots; pass resume=true")
       case None =>
-        // snapshot 0: seeds only (mirrors start_urls, PostSpider.py:40),
-        // split into head (per-host top-headCap) and backlog overflow.
-        // DISTRIBUTED: seed lists can be millions of urls (the bench's
-        // frontier harness seeds 3M); canonicalize/dedupe/rank/split as
-        // Dataset ops over a parallelized seed RDD — never driver-side
-        // scala sorting or one giant LocalRelation in the plan.
-        import org.apache.spark.sql.expressions.Window
-        import org.apache.spark.sql.functions._
-        val epoch = new Timestamp(0L)
-        graft.expressions.UrlExpressions.register(spark)
-        val canonUdf = udf((u: String) => graft.core.UrlCanon.canonicalize(u))
-        val slices = math.max(1, math.min(64, seedUrls.size / 50000 + 1))
-        val raw = spark.createDataset(
-          spark.sparkContext.parallelize(seedUrls, slices)).toDF("raw_url")
-        // canonical-identity dedupe BEFORE gating (the oracle simulator
-        // dedupes seeds via seen.add — duplicate or alias-canonical seeds
-        // must not double-enqueue; ADVICE r1)
-        var canon = raw.select(canonUdf(col("raw_url")).as("url"))
-        if (cfg.obeyRobots && robots.nonEmpty) {
-          graft.expressions.UrlExpressions.registerRobots(spark, robots)
-          canon = canon.filter(expr("graft_robots_allowed(url)"))
-        }
-        // dedupe on the 128-bit pair, not url_hash alone: a 64-bit seed
-        // collision must not silently drop a distinct seed url
-        val entries = canon
-          .withColumn("url_hash", expr("graft_url_hash(url)"))
-          .withColumn("url_hash2", expr("graft_url_hash2(url)"))
-          .dropDuplicates("url_hash", "url_hash2")
-          .withColumn("host", expr("graft_url_host(url)"))
-          .withColumn("host_hash", expr("graft_url_hash(host)"))
-          .withColumn("priority", lit(0))
-          .withColumn("depth", lit(0))
-          .withColumn("parent_url", lit(""))
-          .withColumn("discovered_round", lit(0))
-          .withColumn("warc_ts", lit(epoch))
-          .select((TieredFrontier.feCols :+ "url_hash2").map(col): _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val feOnly = TieredFrontier.feCols.map(col)
-        // Fast path: when the RAW seed list is no bigger than one host's
-        // head capacity, no host can overflow (dedupe only shrinks), so
-        // head = all entries and the backlog is empty — the per-host
-        // window, overflow agg, and backlog write are skipped (3 serial
-        // jobs off every small-seed session; the bench's frontier harness
-        // with millions of seeds still takes the distributed split).
-        var overflowCount = 0L
-        var rankedOpt: Option[org.apache.spark.sql.DataFrame] = None
-        if (seedUrls.size <= headCap) {
-          entries.select(feOnly: _*).write.mode("overwrite")
-            .parquet(TieredFrontier.headPath(warehouse, 0))
-          spark.createDataFrame(spark.sparkContext
-              .emptyRDD[org.apache.spark.sql.Row],
-              TieredFrontier.hostStateSchema)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(TieredFrontier.hostStatePath(warehouse, 0))
-        } else {
-          val w = Window.partitionBy(col("host_hash"))
-            .orderBy(col("priority"), col("warc_ts"), col("url_hash"))
-          val ranked = entries.withColumn("rn", row_number().over(w))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          rankedOpt = Some(ranked)
-          ranked.filter(col("rn") <= headCap).select(feOnly: _*)
-            .write.mode("overwrite")
-            .parquet(TieredFrontier.headPath(warehouse, 0))
-          val overflow = ranked.filter(col("rn") > headCap)
-            .select(feOnly: _*)
-          // host_state rows carry the backlog's per-host minimum key (the
-          // head/backlog ordering invariant — see TieredFrontier); derived
-          // with one tiny agg, and its collected rows (≤ overflowing hosts)
-          // give the manifest's overflow count without an extra job
-          val hostStateRows = overflow.groupBy(col("host_hash"))
-            .agg(count(lit(1)).as("backlog_count"),
-              min(struct(col("priority"), col("warc_ts"), col("url_hash")))
-                .as("bmin"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          overflowCount = hostStateRows
-            .agg(coalesce(sum(col("backlog_count")), lit(0L))).collect()(0)
-            .getLong(0)
-          if (overflowCount > 0)
-            overflow.withColumn("host_bucket",
-              CrawlRound.hostBucketCol(col("host_hash")))
-              .write.mode("overwrite").partitionBy("host_bucket")
-              .parquet(TieredFrontier.addPath(warehouse, 0))
-          hostStateRows.coalesce(1).write.mode("overwrite")
-            .parquet(TieredFrontier.hostStatePath(warehouse, 0))
-          hostStateRows.unpersist()
-        }
-        entries.select("url_hash", "url_hash2")
-          .sortWithinPartitions(col("url_hash"))
-          .write.mode("overwrite")
-          .parquet(Snapshots.tablePath(warehouse, 0, "seen_delta"))
-        // sharded Bloom + seed count in one distributed agg grouped by the
-        // url_hash-range shard key (no driver put-loop; S=1 locally, S>1
-        // when expectedUrls exceeds one filter's capacity — ShardedBloom)
-        val (bloom, seedCount) = ShardedBloom.buildShardsWithCount(
-          entries, "url_hash", expectedUrls,
-          ShardedBloom.numShardsFor(expectedUrls))
-        Snapshots.writeBloomShards(warehouse, 0, bloom)
-        Snapshots.writeManifest(warehouse, Snapshots.Manifest(0, -1,
-          seedCount, seedCount, 0, 0, 0, Nil,
-          headCount = seedCount - overflowCount,
-          backlogPending = overflowCount,
-          backlogPhysRows = overflowCount, baseRound = -1))
-        entries.unpersist(); rankedOpt.foreach(_.unpersist())
+        seedSnapshot(spark, seedUrls, cfg, warehouse, expectedUrls, robots)
         1
     }
-
-    var round = startRound
     var totalFetched = 0L
     var totalErrors = 0L
     var totalDeduped = 0L
@@ -181,8 +77,8 @@ object CrawlLoop {
     var bloomShards: Array[Array[Byte]] = null
 
     // previous round's suspect count — sizes the fused count+Bloom agg in
-    // burst rounds (CrawlRound r7). Session-local only: a resumed crawl's
-    // first round simply pays the old two-job path once.
+    // burst rounds (CrawlRound). Session-local only: a resumed crawl's
+    // first round simply pays the two-job path once.
     var suspectHint = -1L
 
     while (state.pending != 0L && round <= cfg.maxRounds &&
@@ -191,33 +87,21 @@ object CrawlLoop {
       val head = TieredFrontier.readHead(spark, warehouse, prev)
       val seen = Snapshots.readTable(spark, warehouse, "seen_delta", prev)
         .getOrElse(Seq.empty[(Long, Long)].toDF("url_hash", "url_hash2"))
-      val bloom =
-        if (bloomShards != null) bloomShards
-        else Snapshots.readBloomShards(warehouse, prev)
+      val bloom = Option(bloomShards)
+        .getOrElse(Snapshots.readBloomShards(warehouse, prev))
 
       // the round writes fetched/misses/head/backlog deltas/host_state/
       // seen_delta itself; manifest below is the commit marker
-      val tRound = System.nanoTime()
       val res = CrawlRound.run(spark, head, pages, seen, bloom, cfg,
         round, warehouse, state, expectedUrls, robots, suspectHint)
       suspectHint = res.suspectCount
-      if (sys.env.contains("GRAFT_ROUND_LOG"))
-        println(f"[round $round%3d] fetched=${res.fetchedCount}%7d " +
-          f"new=${res.newCount}%7d deduped=${res.dedupedCount}%7d " +
-          f"ovfl=${res.overflowCount}%6d refill=${res.refillCount}%6d " +
-          f"sec=${(System.nanoTime() - tRound) / 1e9}%6.1f")
 
-      val tCommit = System.nanoTime()
       // incremental Bloom merge (north_rule "merge deltas at round
       // boundaries"): the round built this delta's Bloom DISTRIBUTED with
       // the cumulative filter's geometry; one bitwise OR here — the driver
       // never sees raw hashes, only two bitsets.
-      val merged = res.deltaBloom match {
-        case Some(delta) => ShardedBloom.mergeInto(bloom, delta)
-        case None        => bloom
-      }
-      Snapshots.writeBloomShards(warehouse, round, merged)
-      bloomShards = merged
+      bloomShards = res.deltaBloom.fold(bloom)(ShardedBloom.mergeInto(bloom, _))
+      Snapshots.writeBloomShards(warehouse, round, bloomShards)
       state = res.state
 
       // amortized backlog compaction: rewrite pending as a fresh base once
@@ -236,9 +120,6 @@ object CrawlLoop {
         res.dedupedCount, res.lineage, headCount = state.headCount,
         backlogPending = state.backlogPending,
         backlogPhysRows = state.backlogPhysRows, baseRound = state.baseRound))
-      if (sys.env.contains("GRAFT_ROUND_LOG"))
-        println(f"    [phase] commit        " +
-          f"${(System.nanoTime() - tCommit) / 1e9}%6.2fs")
 
       totalFetched += res.fetchedCount
       totalErrors += res.errorCount
@@ -254,6 +135,69 @@ object CrawlLoop {
       .map(_.seenDeltaCount).sum
     CrawlSummary(lastRound, totalFetched, totalErrors, totalDeduped,
       seenCount, pendingAfter = math.max(state.pending, 0L))
+  }
+
+  /** Snapshot 0: seeds only (mirrors start_urls, PostSpider.py:40), split
+    * into head and backlog by [[TieredFrontier.writeTiers]]. DISTRIBUTED:
+    * seed lists can be millions of urls (the bench's frontier harness
+    * seeds 3M); canonicalize/dedupe/rank/split as Dataset ops over a
+    * parallelized seed RDD — never driver-side scala sorting or one giant
+    * LocalRelation in the plan. */
+  private def seedSnapshot(spark: SparkSession, seedUrls: Seq[String],
+                           cfg: Crawl.CrawlConfig, warehouse: String,
+                           expectedUrls: Long,
+                           robots: Map[String, Vector[String]]): Unit = {
+    import spark.implicits._
+    graft.expressions.UrlExpressions.register(spark)
+    val canonUdf = udf((u: String) => graft.core.UrlCanon.canonicalize(u))
+    val slices = math.max(1, math.min(64, seedUrls.size / 50000 + 1))
+    // canonical-identity dedupe BEFORE gating (the oracle simulator
+    // dedupes seeds via seen.add — duplicate or alias-canonical seeds
+    // must not double-enqueue)
+    val canon = spark.sparkContext.parallelize(seedUrls, slices).toDF("raw_url")
+      .select(canonUdf(col("raw_url")).as("url"))
+    val gated =
+      if (cfg.obeyRobots && robots.nonEmpty) {
+        graft.expressions.UrlExpressions.registerRobots(spark, robots)
+        canon.filter(expr("graft_robots_allowed(url)"))
+      } else canon
+    // dedupe on the 128-bit pair, not url_hash alone: a 64-bit seed
+    // collision must not silently drop a distinct seed url
+    val entries = gated
+      .withColumn("url_hash", expr("graft_url_hash(url)"))
+      .withColumn("url_hash2", expr("graft_url_hash2(url)"))
+      .dropDuplicates("url_hash", "url_hash2")
+      .withColumn("host", expr("graft_url_host(url)"))
+      .withColumn("host_hash", expr("graft_url_hash(host)"))
+      .withColumn("priority", lit(0))
+      .withColumn("depth", lit(0))
+      .withColumn("parent_url", lit(""))
+      .withColumn("discovered_round", lit(0))
+      .withColumn("warc_ts", lit(new Timestamp(0L)))
+      .select((TieredFrontier.feCols :+ "url_hash2").map(col): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // when the RAW seed list is no bigger than one host's head capacity,
+      // no host can overflow (dedupe only shrinks)
+      val headCap = cfg.perHostBudget * TieredFrontier.HeadFactor
+      val backlog = TieredFrontier.writeTiers(spark, warehouse, 0, entries,
+        headCap, fits = seedUrls.size <= headCap)
+      entries.select("url_hash", "url_hash2")
+        .sortWithinPartitions(col("url_hash"))
+        .write.mode("overwrite")
+        .parquet(Snapshots.tablePath(warehouse, 0, "seen_delta"))
+      // sharded Bloom + seed count in one distributed agg grouped by the
+      // url_hash-range shard key (no driver put-loop; S=1 locally, S>1
+      // when expectedUrls exceeds one filter's capacity — ShardedBloom)
+      val (bloom, seedCount) = ShardedBloom.buildShardsWithCount(
+        entries, "url_hash", expectedUrls,
+        ShardedBloom.numShardsFor(expectedUrls))
+      Snapshots.writeBloomShards(warehouse, 0, bloom)
+      Snapshots.writeManifest(warehouse, Snapshots.Manifest(0, -1,
+        seedCount, seedCount, 0, 0, 0, Nil,
+        headCount = seedCount - backlog, backlogPending = backlog,
+        backlogPhysRows = backlog, baseRound = -1))
+    } finally entries.unpersist()
   }
 
   /** Final item tables (union of per-round deltas at the latest snapshot). */

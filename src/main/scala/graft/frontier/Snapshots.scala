@@ -12,13 +12,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   * warehouse/
   *   snap-00000/
-  *     frontier/      pending FrontierEntry rows (Parquet)
-  *     seen_delta/    url hashes first enqueued this round (Parquet)
-  *     posts/ replies/ comments/ tieba_names/ fetch_log/   per-round item deltas
-  *     bloom.bin      cumulative Bloom bytes as of this round
+  *     head/ host_state/          frontier head + per-host backlog state
+  *     backlog_add/ backlog_rm/ backlog_base/   backlog delta segments
+  *     seen_delta/    url-hash pairs first enqueued this round
+  *     fetched/       the round's fetch working set (item tables and the
+  *                    fetch log are views over it — see [[Tables]])
+  *     misses/        selected urls with no page row
+  *     bloom-000.bin … cumulative Bloom shards as of this round
+  *                    (`bloom-%03d.bin`, one per url_hash range)
   *     manifest.json  COMMIT MARKER — written last; a snapshot without a
   *                    manifest is invisible (aborted round ⇒ clean resume)
   * }}}
+  *
+  * The directories are exactly [[PhysicalTables]], all Parquet.
   *
   * Item tables and the seen set are stored as per-round DELTAS: the full
   * table at round k = union of deltas 0..k. At the 10^10-URL design point

@@ -2,8 +2,11 @@ package graft.frontier
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Tiered frontier storage — the O(delta)-per-round layout (Mercator's
   * front/back-queue design re-expressed for batch rounds).
@@ -19,8 +22,9 @@ import org.apache.spark.sql.functions._
   *    scans) plus per-round tombstone files (`backlog_rm`, url hashes
   *    moved back into the head). Never rewritten per round; compacted to
   *    a `backlog_base` when tombstones exceed [[CompactFraction]].
-  *  - '''host_state''' — (host_hash, backlog_count): the tiny full-state
-  *    table driving refill decisions without scanning the backlog.
+  *  - '''host_state''' — (host_hash, backlog_count, bmin = the backlog's
+  *    minimum politeness key): the tiny full-state table driving refill
+  *    decisions without scanning the backlog.
   *
   * Invariant (per host): every backlog entry orders AFTER every head
   * entry, so head-only selection equals full-frontier selection whenever
@@ -58,21 +62,30 @@ object TieredFrontier {
     * small Spark job per `spark.read.parquet` (a footer read), and the
     * round loop does several reads per round — at cluster job-launch
     * latencies that was measurable serial driver time (F) every round. */
-  val feSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
+  val feSchema: StructType = StructType.fromDDL(
       "url STRING, url_hash BIGINT, host STRING, host_hash BIGINT, " +
         "priority INT, depth INT, parent_url STRING, " +
         "discovered_round INT, warc_ts TIMESTAMP")
   /** Backlog segments are directory-partitioned by host_bucket. */
-  val backlogSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
+  val backlogSchema: StructType = StructType.fromDDL(
       "url STRING, url_hash BIGINT, host STRING, host_hash BIGINT, " +
         "priority INT, depth INT, parent_url STRING, " +
         "discovered_round INT, warc_ts TIMESTAMP, host_bucket INT")
-  val hostStateSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "host_hash BIGINT, backlog_count BIGINT, " +
-        "bmin STRUCT<priority: INT, warc_ts: TIMESTAMP, url_hash: BIGINT>")
+
+  /** The politeness order (priority, warc_ts, url_hash): selection,
+    * overflow, refill and the head/backlog invariant all rank by it. */
+  val orderCols: Seq[Column] =
+    Seq(col("priority"), col("warc_ts"), col("url_hash"))
+  /** Per-host rank in the politeness order. */
+  val hostWindow: WindowSpec =
+    Window.partitionBy(col("host_hash")).orderBy(orderCols: _*)
+  /** The order as one comparable struct — host_state's `bmin`. */
+  def keyCol: Column = struct(orderCols: _*)
+  val keyType: StructType =
+    StructType.fromDDL("priority INT, warc_ts TIMESTAMP, url_hash BIGINT")
+  val hostStateSchema: StructType = new StructType()
+    .add("host_hash", LongType).add("backlog_count", LongType)
+    .add("bmin", keyType)
 
   def headPath(wh: String, round: Int): String =
     Snapshots.tablePath(wh, round, "head")
@@ -93,6 +106,47 @@ object TieredFrontier {
 
   private def existing(paths: Seq[String]): Seq[String] =
     paths.filter(p => Files.exists(Paths.get(p)))
+
+  /** Writes round `round`'s tiers from a set of frontier entries: per host
+    * the first `headCap` in the politeness order form the head, the rest
+    * the backlog (`backlog_add` + `host_state`). `fits` = no host can
+    * exceed headCap, so the head is every entry and the per-host window,
+    * overflow agg and backlog write are skipped (3 serial jobs off every
+    * small-seed session). Returns the backlog row count. */
+  def writeTiers(spark: SparkSession, wh: String, round: Int,
+                 entries: DataFrame, headCap: Int, fits: Boolean): Long = {
+    val fe = feCols.map(col)
+    if (fits) {
+      entries.select(fe: _*).write.mode("overwrite").parquet(headPath(wh, round))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hostStateSchema)
+        .coalesce(1).write.mode("overwrite").parquet(hostStatePath(wh, round))
+      return 0L
+    }
+    val ranked = entries.withColumn("rn", row_number().over(hostWindow))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val overflow = ranked.filter(col("rn") > headCap).select(fe: _*)
+    // host_state rows carry the backlog's per-host minimum key (the
+    // head/backlog ordering invariant); derived with one tiny agg, and its
+    // collected rows (≤ overflowing hosts) give the overflow count
+    // without an extra job
+    val hostState = overflow.groupBy(col("host_hash"))
+      .agg(count(lit(1)).as("backlog_count"), min(keyCol).as("bmin"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      ranked.filter(col("rn") <= headCap).select(fe: _*)
+        .write.mode("overwrite").parquet(headPath(wh, round))
+      val n = hostState.agg(coalesce(sum(col("backlog_count")), lit(0L)))
+        .collect()(0).getLong(0)
+      if (n > 0)
+        overflow.withColumn("host_bucket",
+          graft.round.CrawlRound.hostBucketCol(col("host_hash")))
+          .write.mode("overwrite").partitionBy("host_bucket")
+          .parquet(addPath(wh, round))
+      hostState.coalesce(1).write.mode("overwrite")
+        .parquet(hostStatePath(wh, round))
+      n
+    } finally { hostState.unpersist(); ranked.unpersist() }
+  }
 
   /** Pending backlog at round `upTo`: (base at baseRound if any) ∪ adds in
     * (baseRound, upTo] minus tombstones in (baseRound, upTo]. Pass
@@ -182,7 +236,7 @@ object TieredFrontier {
               prevBaseRound: Int): Long = {
     val pending = readBacklogPending(spark, wh, prevBaseRound, round)
       .getOrElse(return 0L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // a fully-tombstoned backlog must write NOTHING: a 0-row partitioned
       // parquet write emits no part files, and every later read of that

@@ -1,11 +1,11 @@
 package graft.round
 
-import graft.core.{Crawl, UrlCanon}
-import graft.frontier.{BloomSeen, FrontierEntry, PartitionLineage, ShardedBloom, Snapshots, TieredFrontier}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import scala.concurrent.Future
+
+import graft.core.Crawl
+import graft.frontier.{BloomSeen, PartitionLineage, ShardedBloom, Snapshots, TieredFrontier}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** One crawl round as a declarative Dataset pipeline (north_rule):
   *
@@ -33,9 +33,9 @@ import org.apache.spark.storage.StorageLevel
   *  - the round's CRITICAL PATH is three serial jobs — the fetch+extract
   *    write, the suspect count (the expansion's dedup shuffle, whose
   *    completion picks the confirm branch), and the overflow probe
-  *    (which materializes the merged frontier's cache). The head write
-  *    runs as a CONCURRENT job sharing that cache (r6 — measured
-  *    -11% wall vs the serial write in an interleaved same-binary A/B),
+  *    (a per-host count over the cached head and new entries). The head
+  *    write runs as a CONCURRENT job over the same caches (measured -11%
+  *    wall vs the serial write in an interleaved same-binary A/B),
   *    and everything else (lineage agg, miss log, seen delta, Bloom
   *    delta build, backlog delta, host-state upkeep) is likewise off
   *    the critical path; all bookkeeping counts are derived
@@ -63,18 +63,13 @@ object CrawlRound {
     * config bug found in r4), and a 16 GB re-check puts the crossover
     * higher at 4 executors but LOWER at 1 (the lone executor pays
     * relation build + GC on top of all the work) — so the conservative
-    * default stands and [[broadcastRowGate]] is the deploy-time knob.
+    * default stands.
     * Above the gate (the 10^10 design point is 16/host × 10^7 hosts ≈
     * 1.6e8 selected rows — a guaranteed driver OOM if forced) the join is
     * a plain equi-join with a [[fetchJoin selected-slice Bloom]] pushed
     * into the pages scan, so the shuffle moves O(selected) pages, never
     * the whole corpus. */
   val BroadcastRowGate = 250000L
-
-  /** Deploy-time tuning escape hatch for the gate (cluster memory and
-    * selected-row width vary); the constant above is the default. */
-  def broadcastRowGate: Long =
-    sys.env.get("GRAFT_BCAST_GATE").map(_.toLong).getOrElse(BroadcastRowGate)
 
   /** Above this many Bloom-positive suspects, the exact confirm switches
     * from the AQE-broadcast semi join to the suspect-Bloom-prefiltered
@@ -124,22 +119,32 @@ object CrawlRound {
           "left_semi")
       suspects.join(broadcast(matchedSeen), ConfirmKey, "left_anti")
     } else {
-      // r7: burst rounds usually arrive with the suspect Bloom already
+      // burst rounds usually arrive with the suspect Bloom already
       // built — fused into the same agg job as the suspect count, sized
       // by the previous round's count (see run()); only a missing or
       // undersized-beyond-guard hint pays this second pass
-      val bytes = prebuiltBloom.getOrElse {
-        val agg = BloomSeen.bloomBuildUdaf(math.max(nSuspects, 1L << 16),
-          fpp = 0.001)
-        val row = suspects.agg(agg(col("url_hash")).as("b")).collect()(0)
-        row.getAs[Array[Byte]](0)
+      prebuiltBloom.orElse(countAndBloom(suspects, nSuspects, 0.001)._2) match {
+        case None => suspects // no suspect rows: nothing to confirm
+        case Some(bytes) =>
+          val bc = spark.sparkContext.broadcast(bytes)
+          suspects.join(seen.filter(BloomSeen.mightContainCol(bc,
+            col("url_hash"))), ConfirmKey, "left_anti")
       }
-      val bc = spark.sparkContext.broadcast(bytes)
-      val matchedSeen = seen.filter(
-        BloomSeen.mightContainCol(bc, col("url_hash")))
-      suspects.join(matchedSeen, ConfirmKey, "left_anti")
     }
   }
+
+  /** Row count plus a Bloom over `url_hash` (sized for at least
+    * `capacity` items) in ONE aggregation job; `None` when `df` is empty. */
+  private def countAndBloom(df: DataFrame, capacity: Long,
+                            fpp: Double): (Long, Option[Array[Byte]]) = {
+    val agg = BloomSeen.bloomBuildUdaf(math.max(capacity, MinBloomItems), fpp)
+    val row = df.agg(count(lit(1)), agg(col("url_hash"))).collect()(0)
+    (row.getLong(0),
+      if (row.isNullAt(1)) None else Some(row.getAs[Array[Byte]](1)))
+  }
+
+  /** Floor on every Bloom the round sizes from a row count or bound. */
+  private val MinBloomItems = 1L << 16
 
   /** Carried frontier bookkeeping between rounds (persisted in the
     * snapshot manifest): total pending, head/backlog split, physical
@@ -218,7 +223,7 @@ object CrawlRound {
                 selectedCount: Long,
                 selectedBloom: Option[Array[Byte]] = None,
                 withText: Boolean = true): DataFrame =
-    if (selectedCount <= broadcastRowGate)
+    if (selectedCount <= BroadcastRowGate)
       pagesB(pages, withText).join(broadcast(selected),
         Seq("host_bucket", "url"))
     else {
@@ -239,7 +244,9 @@ object CrawlRound {
     * round's snapshot dir (manifest is the caller's commit). `state` lets
     * all output counts be derived without count jobs over big tables;
     * `expectedUrls` sizes the delta Bloom (same geometry as the cumulative
-    * filter so the driver can OR-merge). */
+    * filter so the driver can OR-merge). Every cached frame and side job
+    * belongs to a [[RoundScope]]: whether the round returns or throws, no
+    * cache and no writer outlives this call. */
   def run(spark: SparkSession,
           head: DataFrame,
           pages: DataFrame,
@@ -251,571 +258,544 @@ object CrawlRound {
           state: FrontierState,
           expectedUrls: Long,
           robots: Map[String, Vector[String]] = Map.empty,
-          suspectHint: Long = -1L): RoundResult = {
+          suspectHint: Long = -1L): RoundResult =
+    RoundScope(spark.sparkContext, round) { scope =>
+      val p = new Phases(spark, cfg, round, warehouse, state, scope)
+      val sel = p.select(head, pages)
+      val fetch = p.fetchExtract(sel)
+      val exp = p.expandConfirm(fetch.fetched, seen, bloom, expectedUrls,
+        robots, suspectHint)
+      val merge = p.mergeOverflow(sel.remaining, exp.newEntries)
+      val refill = p.refillReconcile(merge)
+      p.sideWrites(fetch, exp, merge, refill)
+    }
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
+  private val feColsC = TieredFrontier.feCols.map(col)
 
-    def path(table: String): String =
+  // values the phases hand to each other
+  private final case class Selection(selected: DataFrame, remaining: DataFrame,
+                                     gateCount: Long, pages: DataFrame)
+  private final case class Fetch(fetched: DataFrame, selectedCount: Future[Long],
+                                 lineage: Future[Array[Row]])
+  private final case class Expansion(newEntries: DataFrame, nSuspects: Long,
+      deltaBloom: Future[(Option[Array[Array[Byte]]], Long)])
+  private final case class Merge(prevHostState: DataFrame, newWorse: DataFrame,
+                                 kept: DataFrame, overflow: DataFrame,
+                                 noOverflow: Boolean, mergedCounts: DataFrame,
+                                 headWrite: Future[Unit])
+  /** `rows` carries `from_backlog`; `rm` = the picks taken off the backlog;
+    * `nextMin` = each refilled host's new backlog minimum. */
+  private final case class Picks(rows: DataFrame, rm: DataFrame,
+                                 nextMin: DataFrame, rmCount: Future[Long])
+  private final case class Refill(needs: Option[DataFrame], picks: Option[Picks])
+
+  private final class Phases(spark: SparkSession, cfg: Crawl.CrawlConfig,
+                             round: Int, warehouse: String,
+                             state: FrontierState, scope: RoundScope) {
+    private val headCap = cfg.perHostBudget * TieredFrontier.HeadFactor
+
+    private def path(table: String): String =
       Snapshots.tablePath(warehouse, round, table)
 
-    val doLog = sys.env.contains("GRAFT_ROUND_LOG")
-    var tPhase = System.nanoTime()
-    def lap(tag: String): Unit = if (doLog) {
-      val now = System.nanoTime()
-      println(f"    [phase] $tag%-14s ${(now - tPhase) / 1e9}%6.2fs")
-      tPhase = now
+    /** Politeness: per-host budget via window rank (W1) over the HEAD only
+      * — O(active hosts × headCap) rows, never the whole frontier — then
+      * the optional global cap in the same order. */
+    def select(head: DataFrame, pages: DataFrame): Selection =
+      scope.phase("select") {
+        // one window shuffle, reused
+        val ranked = scope.persist(head.select(feColsC: _*)
+          .withColumn("rn", row_number().over(TieredFrontier.hostWindow)))
+        val within = ranked.filter(col("rn") <= cfg.perHostBudget).drop("rn")
+        val beyond = ranked.filter(col("rn") > cfg.perHostBudget).drop("rn")
+        val (selected, remaining) =
+          if (cfg.globalBudget <= 0) (within, beyond)
+          else {
+            val capped = scope.persist(within
+              .orderBy(TieredFrontier.orderCols: _*).limit(cfg.globalBudget))
+            (capped, beyond.unionByName(within.join(capped.select("url_hash"),
+              Seq("url_hash"), "left_anti")))
+          }
+        val selectedP = scope.persist(
+          selected.withColumn("host_bucket", hostBucketCol(col("host_hash"))))
+        // The broadcast gate needs a row bound BEFORE the fetch join, but the
+        // EXACT selected count is only bookkeeping (error/pending arithmetic,
+        // consumed after the fetch write). The manifest's headCount bounds
+        // selected from above (selection ranks within the head), so the gate
+        // decision — and the selected-slice Bloom's sizing above the gate —
+        // use the bound, and the exact count runs as a CONCURRENT job: one
+        // serial head-size barrier removed from EVERY round (measured
+        // 2-8 s/round of serial time in above-gate rounds at cluster job
+        // latencies). Conservative in the bound direction only: a round whose
+        // head exceeds the gate but whose selected slice is under it takes
+        // the Bloom-prefiltered join instead of the broadcast — correct, and
+        // the Bloom oversize is capped by HeadFactor. The serial count
+        // survives only when no manifest bound exists (headCount < 0).
+        val gateCount =
+          if (state.headCount >= 0) state.headCount
+          else selectedP.count() // no-manifest fallback: serial exact count
+
+        // adaptive static bucket pruning: one tiny pre-job when the frontier
+        // is small (sparse buckets likely); full scan + join otherwise
+        val pagesBase = withHostBucket(pages)
+        val pagesPruned =
+          if (state.pending < 0 || state.pending >= PruneThreshold) pagesBase
+          else pagesBase.filter(col("host_bucket").isin(selectedP
+            .select("host_bucket").distinct().collect().map(_.getInt(0))
+            .sorted.map(Int.box).toSeq: _*))
+        Selection(selectedP, remaining, gateCount, pagesPruned)
+      }
+
+    /** pages ⋈ selected (size-gated broadcast), extracted via the shared
+      * pure [[Crawl.process]] and written once as `fetched`. */
+    def fetchExtract(sel: Selection): Fetch = scope.phase("fetch") {
+      // Above-gate rounds need a selected-slice Bloom BEFORE the fetch job;
+      // the exact selected count is also wanted (error/pending bookkeeping,
+      // consumed after the fetch write). One combined agg returns (count,
+      // bloom) in a single pass — two jobs racing over the not-yet-
+      // materialized cached slice would each compute window partitions —
+      // sized by the manifest bound that is known before the pass starts.
+      // Below the gate the count is a concurrent job, off the critical path.
+      graft.expressions.UrlExpressions.register(spark)
+      val (selectedBloom, selectedCount) =
+        if (sel.gateCount > BroadcastRowGate) {
+          val (n, b) = countAndBloom(sel.selected, sel.gateCount, 0.01)
+          (b, Future.successful(n))
+        } else (None,
+          // no-manifest fallback already paid an exact serial count for the
+          // gate — reuse it instead of a second (cached, but still a job)
+          // count in the concurrent future
+          if (state.headCount < 0) Future.successful(sel.gateCount)
+          else scope.future("selected-count")(sel.selected.count()))
+      val hits = fetchJoin(sel.pages,
+        sel.selected.select("host_bucket", "url", "url_hash", "host",
+          "host_hash", "depth", "priority"),
+        sel.gateCount, selectedBloom, withText = cfg.verifyText)
+
+      val cfgB = spark.sparkContext.broadcast(cfg)
+      val processUdf = udf { (url: String, html: Array[Byte]) =>
+        val o = Crawl.process(url, html, cfgB.value)
+        ProcessedPage(o.posts, o.replies, o.comments, o.tiebaNames,
+          o.links.map(l => LinkDto(l.url, l.depth, l.priority)), o.text)
+      }
+      // critical-path job #1: scan+join+extract, written exactly once; every
+      // downstream consumer re-reads this bounded working set from parquet.
+      // (Measured alternative, rejected: persisting the pre-write DF and
+      // running the write concurrently with expansion LOST ~20% at 2 cores —
+      // the in-memory cache can't prune nested fields, so expansion paid for
+      // the whole `out` struct instead of parquet's out.links-only read.)
+      // (dictionary encoding off: text/urls are unique per row — the encoder
+      // would only buffer and fall back, the hottest write frame in JFR)
+      // text_match column is stable in the fetched schema; when verification
+      // is off (production/throughput runs) it is vacuously true rather than
+      // a per-row compare against a corpus column we then never read
+      val fetchedOut = hits
+        .withColumn("out", processUdf(col("url"), col("html")))
+        .withColumn("text_match",
+          if (cfg.verifyText) col("out.text") === col("page_text")
+          else lit(true))
+        .withColumn("partition_id", spark_partition_id())
+        .withColumn("round", lit(round))
+        .drop((Seq("html") ++
+          (if (cfg.verifyText) Seq("page_text") else Nil)): _*)
+      fetchedOut.write.mode("overwrite")
+        .option("parquet.enable.dictionary", "false")
+        .parquet(path("fetched"))
+
+      // re-read with the schema we just wrote: no footer-inference job
+      val fetched = spark.read.schema(fetchedOut.schema).parquet(path("fetched"))
+      val lineage = scope.future("lineage") {
+        fetched.groupBy(col("partition_id"))
+          .agg(count(lit(1)).as("fetched"),
+            sum(size(col("out.links"))).as("links")).collect()
+      }
+      scope.future("misses") {
+        // same size gate as the fetch join: fetched ≤ selected rows, so an
+        // above-gate round must NOT force a driver-side broadcast here
+        // either (it would reintroduce the OOM the gate exists to prevent).
+        // Key is (url_hash, url): the hash narrows the probe, the string
+        // makes it exact — a 64-bit collision between two selected urls
+        // must not erase a miss row from the fetch log.
+        val fetchedHashes = fetched.select("url_hash", "url")
+        val side =
+          if (sel.gateCount <= BroadcastRowGate) broadcast(fetchedHashes)
+          else fetchedHashes
+        sel.selected
+          .join(side, Seq("url_hash", "url"), "left_anti")
+          .select(lit(round).as("round"), col("url"), col("url_hash"),
+            col("host"), col("depth"))
+          .write.mode("overwrite").parquet(path("misses"))
+      }
+      Fetch(fetched, selectedCount, lineage)
     }
 
-    val headCap = cfg.perHostBudget * TieredFrontier.HeadFactor
+    /** Discovered links → in-round dedup → Bloom probe → exact confirm of
+      * the suspects; writes `seen_delta` and builds the delta Bloom. */
+    def expandConfirm(fetched: DataFrame, seen: DataFrame,
+                      bloom: Array[Array[Byte]], expectedUrls: Long,
+                      robots: Map[String, Vector[String]],
+                      suspectHint: Long): Expansion = scope.phase("expand") {
+      // native Catalyst expressions (codegen'd, same kernels as the oracle)
+      // for the per-link hot path — see graft.expressions.UrlExpressions
+      val rawLinks = fetched.select(col("url").as("parent_url"),
+          col("page_warc_ts").as("warc_ts"), explode(col("out.links")).as("l"))
+        .select(col("l.url").as("url"), col("l.depth").as("depth"),
+          col("l.priority").as("priority"), col("parent_url"), col("warc_ts"))
 
-    // ---- politeness: per-host budget via window rank (W1) over the HEAD
-    // only — O(active hosts × headCap) rows, never the whole frontier
-    val orderCols = Seq(col("priority"), col("warc_ts"), col("url_hash"))
-    val w = Window.partitionBy(col("host_hash")).orderBy(orderCols: _*)
-    val feColsC = TieredFrontier.feCols.map(col)
-    val ranked = head.select(feColsC: _*)
-      .withColumn("rn", row_number().over(w))
-      .persist(StorageLevel.MEMORY_AND_DISK) // one window shuffle, reused
-    var selected = ranked.filter(col("rn") <= cfg.perHostBudget).drop("rn")
-    var remaining = ranked.filter(col("rn") > cfg.perHostBudget).drop("rn")
-    if (cfg.globalBudget > 0) {
-      val capped = selected.orderBy(orderCols: _*).limit(cfg.globalBudget)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      remaining = remaining.unionByName(
-        selected.join(capped.select("url_hash"), Seq("url_hash"), "left_anti"))
-      selected = capped
-    }
-    val selectedP = selected
-      .withColumn("host_bucket", hostBucketCol(col("host_hash")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // The broadcast gate needs a row bound BEFORE the fetch join, but the
-    // EXACT selected count is only bookkeeping (error/pending arithmetic,
-    // consumed after the fetch write). The manifest's headCount bounds
-    // selected from above (selection ranks within the head), so the gate
-    // decision — and the selected-slice Bloom's sizing above the gate —
-    // use the bound, and the exact count runs as a CONCURRENT job: one
-    // serial head-size barrier removed from EVERY round (measured
-    // 2-8 s/round of serial time in above-gate rounds at cluster job
-    // latencies). Conservative in the bound direction only: a round whose
-    // head exceeds the gate but whose selected slice is under it takes
-    // the Bloom-prefiltered join instead of the broadcast — correct, and
-    // the Bloom oversize is capped by HeadFactor. The serial count
-    // survives only when no manifest bound exists (headCount < 0).
-    val headBound = state.headCount
-    val gateCount =
-      if (headBound >= 0) headBound
-      else selectedP.count() // no-manifest fallback: serial exact count
+      // robots gate (T3) at ENQUEUE time: blocked urls never enter the
+      // frontier or the seen set (default off — ROBOTSTXT_OBEY=False in the
+      // reference); gating here keeps the frontier-count arithmetic exact.
+      // Native codegen'd expression, not a UDF — this sits on the per-link
+      // hot path when enabled.
+      val gatedLinks =
+        if (cfg.obeyRobots && robots.nonEmpty) {
+          graft.expressions.UrlExpressions.registerRobots(spark, robots)
+          rawLinks.filter(expr("graft_robots_allowed(url)"))
+        } else rawLinks
 
-    // adaptive static bucket pruning: one tiny pre-job when the frontier is
-    // small (sparse buckets likely); full scan + join otherwise
-    val pagesBase = withHostBucket(pages)
-    val pagesPruned =
-      if (state.pending >= 0 && state.pending < PruneThreshold) {
-        val activeBuckets = selectedP.select("host_bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        pagesBase.filter(
-          col("host_bucket").isin(activeBuckets.map(Int.box).toSeq: _*))
-      } else pagesBase
-    lap("rank")
+      // in-round dedup: one deterministic representative per url (min struct)
+      val candidates = gatedLinks
+        .groupBy(col("url"))
+        .agg(min(struct(col("priority"), col("warc_ts"), col("depth"),
+          col("parent_url"))).as("m"))
+        .select(col("url"), col("m.priority").as("priority"),
+          col("m.warc_ts").as("warc_ts"), col("m.depth").as("depth"),
+          col("m.parent_url").as("parent_url"))
+        .withColumn("url_hash", expr("graft_url_hash(url)"))
+        .withColumn("url_hash2", expr("graft_url_hash2(url)"))
+        .withColumn("host", expr("graft_url_host(url)"))
+        .withColumn("host_hash", expr("graft_url_hash(host)"))
+        .withColumn("discovered_round", lit(round))
 
-    // ---- fetch: pages ⋈ selected, size-gated broadcast ------------------
-    // Above-gate rounds need a selected-slice Bloom BEFORE the fetch job;
-    // the exact selected count is also wanted (error/pending bookkeeping,
-    // consumed after the fetch write). r4 ran these as two RACING jobs
-    // over the not-yet-materialized cached slice (the concurrent count
-    // future and the serial Bloom agg each computed window partitions) —
-    // one combined agg now returns (count, bloom) in a single pass, sized
-    // by the manifest bound that is known before the pass starts. Below
-    // the gate the count stays a concurrent job, off the critical path.
-    graft.expressions.UrlExpressions.register(spark)
-    val (selectedBloom, selectedCountF) =
-      if (gateCount > broadcastRowGate) {
-        val agg = BloomSeen.bloomBuildUdaf(math.max(gateCount, 1L << 16))
-        val row = selectedP.agg(count(lit(1)).as("c"),
-          agg(col("url_hash")).as("b")).collect()(0)
-        (if (row.isNullAt(1)) None else Some(row.getAs[Array[Byte]](1)),
-          Future.successful(row.getLong(0)))
-      } else (None,
-        // no-manifest fallback already paid an exact serial count for the
-        // gate — reuse it instead of a second (cached, but still a job)
-        // count in the concurrent future (ADVICE r5)
-        if (headBound < 0) Future.successful(gateCount)
-        else Future(selectedP.count()))
-    val hits = fetchJoin(pagesPruned,
-      selectedP.select("host_bucket", "url", "url_hash", "host",
-        "host_hash", "depth", "priority"),
-      gateCount, selectedBloom, withText = cfg.verifyText)
+      // Bloom pre-filter (broadcast probe); suspects confirmed WITHOUT
+      // shuffling the seen table in ANY regime (see confirmNew).
+      // Zero-suspect rounds (Bloom cleared everything) skip the exact
+      // confirm entirely — otherwise every round pays an O(seen) scan for
+      // nothing, which grows with crawl age.
+      // The count is an EXACT post-dedup count, deliberately: r6 A/B'd an
+      // observe()-metric upper bound measured on the fetch write (raw
+      // Bloom-positive links, zero extra jobs) and it LOST ~11% end-to-end —
+      // the per-link probe taxed the write job 3-6 s/round, and raw-link
+      // multiplicity (links to already-crawled pages recur across pages)
+      // pushed steady-state rounds over SuspectBloomGate, trading the
+      // zero-shuffle broadcast confirm for the O(seen)-scan burst path.
+      // The exact count is the dedup shuffle the expansion needs anyway;
+      // its job completion here is what keeps the gate decision sharp.
+      // The CACHE sits on `probed` (all candidates + flag), not on the
+      // suspects slice: one expansion pass — explode, dedup shuffle,
+      // Bloom probe — feeds both slices; the count below materializes it.
+      val bloomBc = spark.sparkContext.broadcast(bloom)
+      val probed = scope.persist(candidates.withColumn("maybe_seen",
+        ShardedBloom.mightContainCol(bloomBc, col("url_hash"))))
+      val definitelyNew = probed.filter(!col("maybe_seen")).drop("maybe_seen")
+      val suspects = probed.filter(col("maybe_seen")).drop("maybe_seen")
+      // The suspect count is the serial barrier that picks the confirm
+      // branch; burst rounds (count > SuspectBloomGate) additionally need
+      // a Bloom over the suspect hashes before the seen scan. When the
+      // PREVIOUS round was a burst (suspectHint, threaded by CrawlLoop —
+      // crawls are strongly round-correlated), build that Bloom inside the
+      // SAME agg job as the count, sized by the hint — one cache-scan
+      // instead of two serial jobs. An over-capacity Bloom only degrades
+      // fpp (never false negatives), but a degraded prefilter would let
+      // too much of the seen scan into the anti join, so a count past the
+      // sizing discards the fused filter and rebuilds exactly sized (two
+      // jobs, paid only on a badly-wrong hint).
+      val (nSuspects, fusedBloom) =
+        if (suspectHint > SuspectBloomGate) {
+          val cap = math.max(suspectHint * 2, MinBloomItems)
+          val (n, b) = countAndBloom(suspects, cap, 0.001)
+          (n, b.filter(_ => n <= cap))
+        } else (suspects.count(), None)
+      val confirmedNew =
+        if (nSuspects == 0) suspects
+        else confirmNew(seen, suspects, nSuspects, fusedBloom)
+      // url_hash2 rides along ONLY into seen_delta (the confirm pair key);
+      // the frontier schema stays url_hash-only
+      val feCols2 = feColsC :+ col("url_hash2")
+      val newEntries = scope.persist(definitelyNew.select(feCols2: _*)
+        .unionByName(confirmedNew.select(feCols2: _*)))
 
-    // ---- extract + emit via the shared pure function -------------------
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val cfgB = spark.sparkContext.broadcast(cfg)
-    val processUdf = udf { (url: String, html: Array[Byte]) =>
-      val o = Crawl.process(url, html, cfgB.value)
-      ProcessedPage(o.posts, o.replies, o.comments, o.tiebaNames,
-        o.links.map(l => LinkDto(l.url, l.depth, l.priority)), o.text)
-    }
-    // critical-path job #1: scan+join+extract, written exactly once; every
-    // downstream consumer re-reads this bounded working set from parquet.
-    // (Measured alternative, rejected: persisting the pre-write DF and
-    // running the write concurrently with expansion LOST ~20% at 2 cores —
-    // the in-memory cache can't prune nested fields, so expansion paid for
-    // the whole `out` struct instead of parquet's out.links-only read.)
-    // (dictionary encoding off: text/urls are unique per row — the encoder
-    // would only buffer and fall back, the hottest write frame in JFR)
-    // text_match column is stable in the fetched schema; when verification
-    // is off (production/throughput runs) it is vacuously true rather than
-    // a per-row compare against a corpus column we then never read
-    val fetchedOut = hits
-      .withColumn("out", processUdf(col("url"), col("html")))
-      .withColumn("text_match",
-        if (cfg.verifyText) col("out.text") === col("page_text")
-        else lit(true))
-      .withColumn("partition_id", spark_partition_id())
-      .withColumn("round", lit(round))
-      .drop((Seq("html") ++
-        (if (cfg.verifyText) Seq("page_text") else Nil)): _*)
-    fetchedOut.write.mode("overwrite")
-      .option("parquet.enable.dictionary", "false")
-      .parquet(path("fetched"))
-    lap("fetch+extract")
-
-    // re-read with the schema we just wrote: no footer-inference job
-    val fetched = spark.read.schema(fetchedOut.schema).parquet(path("fetched"))
-
-    val lineageF = Future {
-      fetched.groupBy(col("partition_id"))
-        .agg(count(lit(1)).as("fetched"),
-          sum(size(col("out.links"))).as("links")).collect()
-    }
-    val missesF = Future {
-      // same size gate as the fetch join: fetched ≤ selected rows, so an
-      // above-gate round must NOT force a driver-side broadcast here
-      // either (it would reintroduce the OOM the gate exists to prevent).
-      // Key is (url_hash, url): the hash narrows the probe, the string
-      // makes it exact — a 64-bit collision between two selected urls
-      // must not erase a miss row from the fetch log.
-      val fetchedHashes = fetched.select("url_hash", "url")
-      val side =
-        if (gateCount <= broadcastRowGate) broadcast(fetchedHashes)
-        else fetchedHashes
-      selectedP
-        .join(side, Seq("url_hash", "url"), "left_anti")
-        .select(lit(round).as("round"), col("url"), col("url_hash"),
-          col("host"), col("depth"))
-        .write.mode("overwrite").parquet(path("misses"))
-    }
-
-    // ---- frontier expansion ---------------------------------------------
-    // native Catalyst expressions (codegen'd, same kernels as the oracle)
-    // for the per-link hot path — see graft.expressions.UrlExpressions
-    graft.expressions.UrlExpressions.register(spark)
-    val rawLinks = fetched.select(col("url").as("parent_url"),
-        col("page_warc_ts").as("warc_ts"), explode(col("out.links")).as("l"))
-      .select(col("l.url").as("url"), col("l.depth").as("depth"),
-        col("l.priority").as("priority"), col("parent_url"), col("warc_ts"))
-
-    // robots gate (T3) at ENQUEUE time: blocked urls never enter the
-    // frontier or the seen set (default off — ROBOTSTXT_OBEY=False in the
-    // reference); gating here keeps the frontier-count arithmetic exact.
-    // Native codegen'd expression, not a UDF — this sits on the per-link
-    // hot path when enabled.
-    val gatedLinks =
-      if (cfg.obeyRobots && robots.nonEmpty) {
-        graft.expressions.UrlExpressions.registerRobots(spark, robots)
-        rawLinks.filter(expr("graft_robots_allowed(url)"))
-      } else rawLinks
-
-    // in-round dedup: one deterministic representative per url (min struct)
-    val candidates = gatedLinks
-      .groupBy(col("url"))
-      .agg(min(struct(col("priority"), col("warc_ts"), col("depth"),
-        col("parent_url"))).as("m"))
-      .select(col("url"), col("m.priority").as("priority"),
-        col("m.warc_ts").as("warc_ts"), col("m.depth").as("depth"),
-        col("m.parent_url").as("parent_url"))
-      .withColumn("url_hash", expr("graft_url_hash(url)"))
-      .withColumn("url_hash2", expr("graft_url_hash2(url)"))
-      .withColumn("host", expr("graft_url_host(url)"))
-      .withColumn("host_hash", expr("graft_url_hash(host)"))
-      .withColumn("discovered_round", lit(round))
-
-    // Bloom pre-filter (broadcast probe); suspects confirmed WITHOUT
-    // shuffling the seen table in ANY regime (see confirmNew).
-    // Zero-suspect rounds (Bloom cleared everything) skip the exact
-    // confirm entirely — otherwise every round pays an O(seen) scan for
-    // nothing, which grows with crawl age.
-    // The count is an EXACT post-dedup count, deliberately: r6 A/B'd an
-    // observe()-metric upper bound measured on the fetch write (raw
-    // Bloom-positive links, zero extra jobs) and it LOST ~11% end-to-end —
-    // the per-link probe taxed the write job 3-6 s/round, and raw-link
-    // multiplicity (links to already-crawled pages recur across pages)
-    // pushed steady-state rounds over SuspectBloomGate, trading the
-    // zero-shuffle broadcast confirm for the O(seen)-scan burst path.
-    // The exact count is the dedup shuffle the expansion needs anyway;
-    // its job completion here is what keeps the gate decision sharp.
-    // The CACHE sits on `probed` (all candidates + flag), not on the
-    // suspects slice (r7): with only suspects cached, materializing
-    // `newEntries` below re-ran the ENTIRE expansion — explode, dedup
-    // shuffle, Bloom probe — a second time for the definitelyNew side
-    // (measured: the duplicate shuffle burned executor time concurrently
-    // with the overflow probe every round). One expansion pass now feeds
-    // both slices; the count below materializes the cache.
-    val probed = candidates.withColumn("maybe_seen",
-      ShardedBloom.mightContainCol(bloomBc, col("url_hash")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val definitelyNew = probed.filter(!col("maybe_seen")).drop("maybe_seen")
-    val suspects = probed.filter(col("maybe_seen")).drop("maybe_seen")
-    // The suspect count is the serial barrier that picks the confirm
-    // branch; burst rounds (count > SuspectBloomGate) additionally need
-    // a Bloom over the suspect hashes before the seen scan. r7: when the
-    // PREVIOUS round was a burst (suspectHint, threaded by CrawlLoop —
-    // crawls are strongly round-correlated), build that Bloom inside the
-    // SAME agg job as the count, sized by the hint — one cache-scan
-    // instead of two serial jobs. An over-capacity Bloom only degrades
-    // fpp (never false negatives), but a degraded prefilter would let
-    // too much of the seen scan into the anti join, so a count past the
-    // sizing discards the fused filter and rebuilds exactly sized (the
-    // old two-job path, paid only on a badly-wrong hint).
-    val fusedCap = math.max(suspectHint * 2, 1L << 16)
-    val (nSuspects, fusedBloom) =
-      if (suspectHint > SuspectBloomGate) {
-        val agg = BloomSeen.bloomBuildUdaf(fusedCap, fpp = 0.001)
-        val row = suspects.agg(count(lit(1)).as("c"),
-          agg(col("url_hash")).as("b")).collect()(0)
-        val n = row.getLong(0)
-        if (n > fusedCap || row.isNullAt(1)) (n, None)
-        else (n, Some(row.getAs[Array[Byte]](1)))
-      } else (suspects.count(), None)
-    lap("suspects-cnt")
-    val confirmedNew =
-      if (nSuspects == 0) suspects
-      else confirmNew(seen, suspects, nSuspects, fusedBloom)
-    // url_hash2 rides along ONLY into seen_delta (the confirm pair key);
-    // the frontier schema stays url_hash-only
-    val feCols2 = feColsC :+ col("url_hash2")
-    val newEntries = definitelyNew.select(feCols2: _*)
-      .unionByName(confirmedNew.select(feCols2: _*))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // delta Bloom + new count in ONE small job over the cached delta;
-    // seen_delta persisted sorted for parquet min/max range pruning at scale
-    val bloomCountF = Future {
+      // delta Bloom + new count in ONE small job over the cached delta;
       // delta shards share the cumulative filter's shard count + geometry
       // so the driver's round-boundary merge is a per-shard OR
-      val (shards, n) = ShardedBloom.buildShardsWithCount(
-        newEntries, "url_hash", expectedUrls, bloom.length)
-      (if (n == 0) None else Some(shards), n)
+      val deltaBloom = scope.future("delta-bloom") {
+        val (shards, n) = ShardedBloom.buildShardsWithCount(
+          newEntries, "url_hash", expectedUrls, bloom.length)
+        (if (n == 0) None else Some(shards), n)
+      }
+      // seen_delta persisted sorted for parquet min/max range pruning at scale
+      scope.future("seen-delta") {
+        newEntries.select(col("url_hash"), col("url_hash2"))
+          .sortWithinPartitions(col("url_hash"))
+          .write.mode("overwrite").parquet(path("seen_delta"))
+      }
+      Expansion(newEntries, nSuspects, deltaBloom)
     }
-    val seenWriteF = Future {
-      newEntries.select(col("url_hash"), col("url_hash2"))
-        .sortWithinPartitions(col("url_hash"))
-        .write.mode("overwrite").parquet(path("seen_delta"))
-    }
 
-    // ---- tiered-frontier maintenance (head rewrite + backlog deltas) ----
-    // Invariant to preserve (per host): every backlog entry orders AFTER
-    // every head entry in the politeness key (priority, warc_ts, url_hash),
-    // so head-only selection equals full-frontier selection. host_state
-    // carries the backlog's per-host MINIMUM key (`bmin`): new entries
-    // ranking worse than bmin go straight to the backlog (they must not
-    // jump ahead of backlogged work); entries better than bmin compete for
-    // the head. All O(head + new) — backlog size irrelevant.
-    val keyCol = struct(col("priority"), col("warc_ts"), col("url_hash"))
-    val prevHostState =
-      TieredFrontier.readHostState(spark, warehouse, round - 1)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    /** Tiered-frontier maintenance: new entries split against each host's
+      * backlog minimum, the optimistic head write, and the overflow probe.
+      *
+      * Invariant to preserve (per host): every backlog entry orders AFTER
+      * every head entry in the politeness key, so head-only selection
+      * equals full-frontier selection. host_state carries the backlog's
+      * per-host MINIMUM key (`bmin`): new entries ranking worse than bmin go
+      * straight to the backlog (they must not jump ahead of backlogged
+      * work); entries better than bmin compete for the head. All
+      * O(head + new) — backlog size irrelevant. */
+    def mergeOverflow(remaining: DataFrame, newEntries: DataFrame): Merge =
+      scope.phase("merge") {
+        val prevHostState = scope.persist(
+          TieredFrontier.readHostState(spark, warehouse, round - 1))
+        val key = TieredFrontier.keyCol
+        val newWithMin = newEntries.join(
+          prevHostState.filter(col("backlog_count") > 0)
+            .select(col("host_hash"), col("bmin")),
+          Seq("host_hash"), "left")
+        val newBetter = newWithMin
+          .filter(col("bmin").isNull || key < col("bmin")).drop("bmin")
+        val newWorse = scope.persist(newWithMin
+          .filter(col("bmin").isNotNull && key > col("bmin")).drop("bmin"))
 
-    val newWithMin = newEntries.join(
-      prevHostState.filter(col("backlog_count") > 0)
-        .select(col("host_hash"), col("bmin")),
-      Seq("host_hash"), "left")
-    val newBetter = newWithMin
-      .filter(col("bmin").isNull || keyCol < col("bmin")).drop("bmin")
-    val newWorse = newWithMin
-      .filter(col("bmin").isNotNull && keyCol > col("bmin")).drop("bmin")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        // merged is NOT cached in the common no-overflow round: a
+        // full-row (url + parent_url strings) cache WRITE of the whole next
+        // head sat on the round's critical path — measured 2.5-7.3 s/round
+        // at the bench shape. Both inputs (`remaining` via the ranked cache,
+        // `newBetter` via the newEntries cache) are already cached, so the
+        // concurrent head write streams the union straight from those
+        // caches, and the overflow probe aggregates host_hash-only cache
+        // scans instead of materializing full rows. Overflow rounds
+        // (burst/skew) persist merged, where it is consumed several times.
+        val merged = remaining.select(feColsC: _*)
+          .unionByName(newBetter.select(feColsC: _*))
 
-    // merged is NOT cached in the common no-overflow round (r7): it was
-    // previously persisted so the overflow probe and the head write could
-    // share one materialization, but that put a full-row (url +
-    // parent_url strings) cache WRITE of the whole next head on the
-    // round's critical path — measured 2.5-7.3 s/round at the bench
-    // shape. Both inputs (`remaining` via the ranked cache, `newBetter`
-    // via the newEntries cache) are already cached, so the concurrent
-    // head-write job below streams the union straight from those caches,
-    // and the overflow probe aggregates host_hash-only cache scans
-    // instead of materializing full rows. Overflow rounds (burst/skew)
-    // persist merged then, where it really is consumed several times.
-    val merged = remaining.select(feColsC: _*)
-      .unionByName(newBetter.select(feColsC: _*))
-    lap("merge-plan")
+        // OPTIMISTIC head write: in a no-overflow round — the invariant case
+        // for a uniform corpus, since headCap is 8× the politeness budget —
+        // merged IS the next head. The write runs as a CONCURRENT job:
+        // it overlaps the probe agg and every side future instead of sitting
+        // on the critical path (interleaved same-binary A/B at 12k forums,
+        // 4×2 executors: 102-107 s concurrent vs 118-120 s serial). Rounds
+        // that DO overflow detect it post-launch, await the write, and
+        // rewrite the head (refillReconcile) — one wasted bounded parquet
+        // job, paid only in rounds that already pay the per-host window.
+        // Crash-safety: the scope awaits (or, on failure, cancels and
+        // drains) this write before run() returns, and the manifest write is
+        // the commit marker, so a half-written head dir in an uncommitted
+        // round is invisible to resume.
+        val headWrite = scope.future("head") {
+          merged.write.mode("overwrite").parquet(path("head"))
+        }
 
-    // OPTIMISTIC head write: in a no-overflow round — the invariant case
-    // for a uniform corpus, since headCap is 8× the politeness budget —
-    // merged IS the next head. Launch the write as a CONCURRENT job (r6):
-    // the parquet write overlaps the probe agg and every side future
-    // instead of sitting on the critical path as its own serial job
-    // (r5's largest remaining F item: 0.9-5.1 s/round; interleaved
-    // same-binary A/B at 12k forums, 4×2 executors: 102-107 s concurrent
-    // vs 118-120 s serial). Rounds that DO overflow (bursts, skewed
-    // corpora) detect it post-launch, await the write, and rewrite the
-    // head before the commit below — one wasted bounded parquet job,
-    // paid only in rounds that already pay the per-host window rank.
-    // Crash-safety is unchanged: run() awaits this future before
-    // returning, and the manifest write is the commit marker, so a
-    // half-written head dir in an uncommitted round is invisible to
-    // resume.
-    val headWriteF = Future {
-      merged.write.mode("overwrite").parquet(path("head"))
-    }
-    // GRAFT_HEADWRITE=serial: A/B escape hatch back to the r5 shape (the
-    // optimistic write as a serial critical-path job)
-    if (sys.env.get("GRAFT_HEADWRITE").contains("serial"))
-      Await.result(headWriteF, Duration.Inf)
-    lap("head-launch")
-
-    // Overflow probe: a map-side-combined per-host count (≤ one row per
-    // active host) instead of an unconditional row_number over the whole
-    // merged set — the common round has NO host over headCap, so merged
-    // passes straight through and the O(n log n) per-host sort is skipped;
-    // only over-cap hosts' rows (burst rounds) pay the window. r7: the
-    // counts aggregate the host_hash column of the two CACHED inputs
-    // (columnar cache scans prune to the one long column) — same multiset
-    // as merged, no full-row materialization. The counts are CACHED: the
-    // no-overflow round reuses them as the refill counts (kept ≡ merged
-    // there), saving a second head-size aggregation.
-    val mergedCounts = remaining.select(col("host_hash"))
-      .unionByName(newBetter.select(col("host_hash")))
-      .groupBy(col("host_hash"))
-      .agg(count(lit(1)).as("n")).persist(StorageLevel.MEMORY_AND_DISK)
-    val overHosts = mergedCounts.filter(col("n") > headCap)
-      .select("host_hash").persist(StorageLevel.MEMORY_AND_DISK)
-    var overRanked: Option[DataFrame] = None
-    var mergedP: Option[DataFrame] = None
-    val noOverflow = overHosts.isEmpty
-    lap("ovfl-probe")
-    val (kept, overflow) =
-      if (noOverflow) (merged, merged.limit(0))
-      else {
-        val mp = merged.persist(StorageLevel.MEMORY_AND_DISK)
-        mergedP = Some(mp)
-        // AQE broadcasts overHosts when few hosts burst (the usual case)
-        val over = mp.join(overHosts, Seq("host_hash"), "left_semi")
-          .withColumn("rn", row_number().over(w))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        overRanked = Some(over)
-        (mp.join(overHosts, Seq("host_hash"), "left_anti")
-          .unionByName(over.filter(col("rn") <= headCap).drop("rn")),
-          over.filter(col("rn") > headCap).drop("rn"))
+        // Overflow probe: a map-side-combined per-host count (≤ one row per
+        // active host) instead of an unconditional row_number over the whole
+        // merged set — the common round has NO host over headCap, so merged
+        // passes straight through and the O(n log n) per-host sort is
+        // skipped; only over-cap hosts' rows (burst rounds) pay the window.
+        // The counts aggregate the host_hash column of the two CACHED inputs
+        // (same multiset as merged, no full-row materialization). They are
+        // NOT cached before the probe: the probe may be the first reader of
+        // newEntries, and a thread building a cache layered on newEntries
+        // while another thread's newEntries build fails deadlocks the
+        // driver (Spark clears the dependent caches under the failing
+        // cache's lock) instead of failing the round. Only burst rounds
+        // cache the over-cap hosts, once the probe has built newEntries.
+        val mergedCounts = remaining.select(col("host_hash"))
+          .unionByName(newBetter.select(col("host_hash")))
+          .groupBy(col("host_hash"))
+          .agg(count(lit(1)).as("n"))
+        val overCap = mergedCounts.filter(col("n") > headCap).select("host_hash")
+        val noOverflow = overCap.isEmpty
+        val (kept, overflow) =
+          if (noOverflow) (merged, merged.limit(0))
+          else {
+            val overHosts = scope.persist(overCap)
+            val mp = scope.persist(merged)
+            // AQE broadcasts overHosts when few hosts burst (the usual case)
+            val over = scope.persist(
+              mp.join(overHosts, Seq("host_hash"), "left_semi")
+                .withColumn("rn", row_number().over(TieredFrontier.hostWindow)))
+            (mp.join(overHosts, Seq("host_hash"), "left_anti")
+              .unionByName(over.filter(col("rn") <= headCap).drop("rn")),
+              over.filter(col("rn") > headCap).drop("rn"))
+          }
+        Merge(prevHostState, newWorse, kept, overflow, noOverflow,
+          mergedCounts, headWrite)
       }
 
-    // refill: hosts whose kept head dropped below the budget but still
-    // have backlog (per the PREVIOUS round's host_state — overflow needs
-    // merged > headCap ≥ budget, so overflow and refill hosts are
-    // disjoint). The backlog scan is pruned to the refilling hosts'
-    // buckets; this round's `newWorse` joins the refill pool so a fresh
-    // link can still be promoted if it outranks the backlog.
-    // Driver-side shortcut: the manifest's backlogPending arithmetic is
-    // exact, so a backlog-less crawl (the common steady shape here) skips
-    // the whole refill decision — no keptCounts aggregation, no collect,
-    // no backlog read: two serial jobs gone from every such round.
-    val refillNeeds: Option[DataFrame] =
-      if (state.backlogPending <= 0) None
-      else {
-        val keptCounts =
-          if (noOverflow) mergedCounts.select(col("host_hash"),
-            col("n").as("head_n"))
-          else kept.groupBy(col("host_hash"))
-            .agg(count(lit(1)).as("head_n"))
-        Some(prevHostState.filter(col("backlog_count") > 0)
-          .join(keptCounts, Seq("host_hash"), "left")
+    /** Refill hosts whose kept head dropped below the budget but still have
+      * backlog (per the PREVIOUS round's host_state — overflow needs
+      * merged > headCap ≥ budget, so overflow and refill hosts are
+      * disjoint), then reconcile the optimistic head write. The backlog
+      * scan is pruned to the refilling hosts' buckets; this round's
+      * `newWorse` joins the refill pool so a fresh link can still be
+      * promoted if it outranks the backlog. */
+    def refillReconcile(m: Merge): Refill = scope.phase("refill") {
+      // Driver-side shortcut: the manifest's backlogPending arithmetic is
+      // exact, so a backlog-less crawl (the common steady shape here) skips
+      // the whole refill decision — no keptCounts aggregation, no collect,
+      // no backlog read: two serial jobs gone from every such round.
+      val needs =
+        if (state.backlogPending <= 0) None
+        else {
+          val keptCounts =
+            if (m.noOverflow) m.mergedCounts.select(col("host_hash"),
+              col("n").as("head_n"))
+            else m.kept.groupBy(col("host_hash"))
+              .agg(count(lit(1)).as("head_n"))
+          Some(scope.persist(m.prevHostState.filter(col("backlog_count") > 0)
+            .join(keptCounts, Seq("host_hash"), "left")
+            .select(col("host_hash"),
+              coalesce(col("head_n"), lit(0L)).as("head_n"))
+            .filter(col("head_n") < cfg.perHostBudget)
+            .withColumn("need", lit(headCap.toLong) - col("head_n"))))
+        }
+      val picks = needs.flatMap { rn =>
+        val buckets = rn.select(hostBucketCol(col("host_hash")).as("b"))
+          .distinct().collect().map(_.getInt(0)).toSeq.sorted
+        if (buckets.isEmpty) None
+        else TieredFrontier.readBacklogPending(spark, warehouse,
+          state.baseRound, round - 1, Some(buckets)).map(pick(_, rn, m.newWorse))
+      }
+
+      // Reconcile the optimistic head write. Three cases:
+      //  - no overflow, no refill (the common round): merged already IS the
+      //    head on disk (once the head write lands) — nothing to do;
+      //  - no overflow + refill picks: the promoted rows APPEND to the head
+      //    dir (kept ≡ merged is already there) — the in-flight optimistic
+      //    write must finish first so the append sees a settled dir;
+      //  - overflow: rewrite the head as kept ∪ picks (the one wasted
+      //    optimistic write — bounded, burst-rounds-only) — likewise only
+      //    after the in-flight write, or overwrite-vs-write would race on
+      //    the same directory.
+      if (!m.noOverflow) {
+        scope.await(m.headWrite)
+        picks.map(p => m.kept.unionByName(p.rows.select(feColsC: _*)))
+          .getOrElse(m.kept)
+          .write.mode("overwrite").parquet(path("head"))
+      } else picks.foreach { p =>
+        scope.await(m.headWrite)
+        p.rows.select(feColsC: _*).write.mode("append").parquet(path("head"))
+      }
+      Refill(needs, picks)
+    }
+
+    /** The refill pool ranked per host against each host's `need`. */
+    private def pick(backlog: DataFrame, needs: DataFrame,
+                     newWorse: DataFrame): Picks = {
+      // map-side partial top-k: only the best rows per (input partition,
+      // host) reach the exact window — the refill shuffle is
+      // O(headCap × refill hosts), not O(backlog). Keep headCap+1 so rank
+      // need+1 (the next backlog minimum) always survives.
+      val pool = TieredFrontier.localTopKPerHost(
+          backlog.select(feColsC: _*), headCap + 1)
+        .select(feColsC :+ lit(true).as("from_backlog"): _*)
+        .unionByName(
+          newWorse.select(feColsC :+ lit(false).as("from_backlog"): _*))
+      val pranked = scope.persist(pool
+        .join(needs.select("host_hash", "need"), Seq("host_hash"))
+        .withColumn("rn", row_number().over(TieredFrontier.hostWindow)))
+      val rows = pranked.filter(col("rn") <= col("need"))
+      val rm = scope.persist(rows.filter(col("from_backlog"))
+        .select("url_hash", "host_hash"))
+      // pool rank need+1 = the refilled host's NEW backlog minimum
+      // (accounts for both surviving backlog and unpicked new entries);
+      // rmCount is bookkeeping-only (pending arithmetic at the end), so it
+      // runs as a concurrent job, never a barrier before the head reconcile
+      Picks(rows, rm,
+        pranked.filter(col("rn") === col("need") + 1)
+          .select(col("host_hash"), TieredFrontier.keyCol.as("bmin_next")),
+        scope.future("refill-count")(rm.count()))
+    }
+
+    /** Backlog deltas + host-state upkeep off the critical path, then the
+      * bookkeeping — all counts arithmetic, no count jobs on big tables. */
+    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge,
+                   r: Refill): RoundResult = scope.phase("side-writes") {
+      // backlog additions: head overflow + new entries that rank behind the
+      // backlog minimum, MINUS any promoted during refill
+      val newWorse = m.newWorse.select(feColsC: _*)
+      val backlogAdd = scope.persist(m.overflow
+        .unionByName(r.picks match {
+          case Some(p) => newWorse.join(p.rows.filter(!col("from_backlog"))
+            .select("url_hash"), Seq("url_hash"), "left_anti")
+          case None => newWorse
+        })
+        .withColumn("host_bucket", hostBucketCol(col("host_hash"))))
+
+      // the overflow count (bookkeeping) rides the same future as the
+      // write — never a serial job between the head write and the side jobs
+      val backlogWrite = scope.future("backlog") {
+        val overflowCount = backlogAdd.count()
+        if (overflowCount > 0)
+          backlogAdd.write.mode("overwrite").partitionBy("host_bucket")
+            .parquet(path("backlog_add"))
+        r.picks.foreach(_.rm.write.mode("overwrite").parquet(path("backlog_rm")))
+        overflowCount
+      }
+      scope.future("host-state") {
+        val addStats = backlogAdd.groupBy(col("host_hash"))
+          .agg(count(lit(1)).as("d_add"),
+            min(TieredFrontier.keyCol).as("add_min"))
+        val st0 = m.prevHostState.join(addStats, Seq("host_hash"), "full_outer")
+        val st = r.picks match {
+          case Some(p) => st0
+            .join(p.rm.groupBy(col("host_hash")).agg(count(lit(1)).as("d_rm")),
+              Seq("host_hash"), "full_outer")
+            .join(p.nextMin, Seq("host_hash"), "full_outer")
+          case None => st0.withColumn("d_rm", lit(0L))
+            .withColumn("bmin_next", lit(null).cast(TieredFrontier.keyType))
+        }
+        // refilled hosts get the freshly-scanned minimum (null = drained;
+        // already covers entries added this round — they were in the pool);
+        // everyone else keeps least(old bmin, this round's added minimum)
+        val withRefilled = r.needs match {
+          case Some(rn) => st.join(rn.select(col("host_hash"),
+            lit(true).as("was_refilled")), Seq("host_hash"), "left")
+          case None => st.withColumn("was_refilled", lit(false))
+        }
+        withRefilled
           .select(col("host_hash"),
-            coalesce(col("head_n"), lit(0L)).as("head_n"))
-          .filter(col("head_n") < cfg.perHostBudget)
-          .withColumn("need", lit(headCap.toLong) - col("head_n"))
-          .persist(StorageLevel.MEMORY_AND_DISK))
+            (coalesce(col("backlog_count"), lit(0L)) +
+              coalesce(col("d_add"), lit(0L)) -
+              coalesce(col("d_rm"), lit(0L))).as("backlog_count"),
+            when(coalesce(col("was_refilled"), lit(false)), col("bmin_next"))
+              .otherwise(least(col("bmin"), col("add_min"))).as("bmin"))
+          .filter(col("backlog_count") > 0)
+          .coalesce(1) // tiny table; one valid footer even when empty
+          .write.mode("overwrite").parquet(path("host_state"))
       }
-    val refillBuckets = refillNeeds match {
-      case None => Nil
-      case Some(rn) => rn.select(hostBucketCol(col("host_hash")).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
+
+      val selectedCount = scope.await(fetch.selectedCount)
+      val lineageRows = scope.await(fetch.lineage)
+      val fetchedCount = lineageRows.map(_.getLong(1)).sum
+      val discoveredCount = lineageRows.map(_.getLong(2)).sum
+      // Contract: `pages` has unique (host_bucket, url) rows — the corpus
+      // writer guarantees it and the generator derives urls from unique ids.
+      // A duplicate page row would multiply join hits and drive this
+      // negative, silently corrupting the driver loop's termination
+      // arithmetic, so fail loudly instead.
+      val errorCount = selectedCount - fetchedCount
+      require(errorCount >= 0,
+        s"round $round: fetched ($fetchedCount) > selected ($selectedCount); " +
+          "pages table violates the unique-(host_bucket,url) contract")
+      val (deltaBloom, newCount) = scope.await(exp.deltaBloom)
+      val overflowCount = scope.await(backlogWrite)
+      val rmCount = r.picks.fold(0L)(p => scope.await(p.rmCount))
+      val dedupedCount = discoveredCount - newCount
+      // overflowCount = rows added to backlog; rmCount = rows promoted out
+      val pending = state.pending - selectedCount + newCount
+      val backlogPending = state.backlogPending + overflowCount - rmCount
+      val newState = FrontierState(pending, pending - backlogPending,
+        backlogPending, state.backlogPhysRows + overflowCount, state.baseRound)
+
+      val lineage = lineageRows.map(r =>
+        PartitionLineage(round, r.getInt(0), r.getLong(1), 0L, 0L)).toSeq :+
+        PartitionLineage(round, -1, 0L, dedupedCount, errorCount)
+
+      // the remaining side writes (misses, seen_delta, head, host_state)
+      // are awaited by the scope before run() returns — the caller's
+      // manifest commit makes this round visible to resume
+      RoundResult(selectedCount, fetchedCount, errorCount, discoveredCount,
+        newCount, dedupedCount, overflowCount, rmCount, newState,
+        deltaBloom, lineage, suspectCount = exp.nSuspects)
     }
-
-    lap("refill-plan")
-    val backlogOpt =
-      if (refillBuckets.isEmpty) None
-      else TieredFrontier.readBacklogPending(spark, warehouse,
-        state.baseRound, round - 1, Some(refillBuckets))
-    // (picks, promotedFromBacklog, promotedFromNew, nextMins, rmCountF)
-    // rmCount is bookkeeping-only (pending arithmetic at the end), so it
-    // runs as a concurrent job, never a barrier before the head reconcile
-    var prankedP: Option[DataFrame] = None
-    val (picksOpt, rmRows, promotedNewRows, nextMins, rmCountF) =
-      backlogOpt match {
-        case None =>
-          (None: Option[DataFrame], None: Option[DataFrame],
-            None: Option[DataFrame], None: Option[DataFrame],
-            Future.successful(0L))
-        case Some(backlog) =>
-          // map-side partial top-k: only the best rows per (input
-          // partition, host) reach the exact window — the refill shuffle
-          // is O(headCap × refill hosts), not O(backlog). Keep headCap+1
-          // so rank need+1 (the next backlog minimum) always survives.
-          val backlogTop = TieredFrontier.localTopKPerHost(
-            backlog.select(feColsC: _*), headCap + 1)
-          val pool = backlogTop
-            .select(feColsC :+ lit(true).as("from_backlog"): _*)
-            .unionByName(
-              newWorse.select(feColsC :+ lit(false).as("from_backlog"): _*))
-          val pranked = pool
-            .join(refillNeeds.get.select("host_hash", "need"), Seq("host_hash"))
-            .withColumn("rn", row_number().over(w))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          prankedP = Some(pranked)
-          val picks = pranked.filter(col("rn") <= col("need"))
-          // pool rank need+1 = the refilled host's NEW backlog minimum
-          // (accounts for both surviving backlog and unpicked new entries)
-          val nextMin = pranked.filter(col("rn") === col("need") + 1)
-            .select(col("host_hash"), keyCol.as("bmin_next"))
-          val rm = picks.filter(col("from_backlog"))
-            .select("url_hash", "host_hash")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          (Some(picks),
-            Some(rm),
-            Some(picks.filter(!col("from_backlog"))
-              .select("url_hash", "host_hash")),
-            Some(nextMin), Future(rm.count()))
-      }
-
-    // Reconcile the optimistic head write. Three cases:
-    //  - no overflow, no refill (the common round): merged already IS the
-    //    head on disk (once headWriteF lands) — nothing to do;
-    //  - no overflow + refill picks: the promoted rows APPEND to the head
-    //    dir (kept ≡ merged is already there) — the in-flight optimistic
-    //    write must finish first so the append sees a settled dir;
-    //  - overflow: rewrite the head as kept ∪ picks (the one wasted
-    //    optimistic write — bounded, burst-rounds-only) — likewise only
-    //    after the in-flight write, or overwrite-vs-write would race on
-    //    the same directory.
-    if (!noOverflow) {
-      Await.result(headWriteF, Duration.Inf)
-      picksOpt.map(p => kept.unionByName(p.select(feColsC: _*)))
-        .getOrElse(kept)
-        .write.mode("overwrite").parquet(path("head"))
-    } else picksOpt.foreach { p =>
-      Await.result(headWriteF, Duration.Inf)
-      p.select(feColsC: _*).write.mode("append").parquet(path("head"))
-    }
-    lap("head-reconcile")
-
-    // backlog additions: head overflow + new entries that rank behind the
-    // backlog minimum, MINUS any promoted during refill
-    val backlogAdd = overflow
-      .unionByName(promotedNewRows match {
-        case Some(p) => newWorse.select(feColsC: _*)
-          .join(p.select("url_hash"), Seq("url_hash"), "left_anti")
-        case None => newWorse.select(feColsC: _*)
-      })
-      .withColumn("host_bucket", hostBucketCol(col("host_hash")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // backlog deltas + host-state upkeep, off the critical path; the
-    // overflow count (bookkeeping) rides the same future as the write —
-    // never a serial job between the head write and the side jobs
-    val backlogWriteF = Future {
-      val overflowCount = backlogAdd.count()
-      if (overflowCount > 0)
-        backlogAdd.write.mode("overwrite").partitionBy("host_bucket")
-          .parquet(path("backlog_add"))
-      rmRows.foreach(p =>
-        p.write.mode("overwrite").parquet(path("backlog_rm")))
-      overflowCount
-    }
-    val hostStateF = Future {
-      val addStats = backlogAdd.groupBy(col("host_hash"))
-        .agg(count(lit(1)).as("d_add"), min(keyCol).as("add_min"))
-      val rmStats = rmRows.map(_.groupBy(col("host_hash"))
-        .agg(count(lit(1)).as("d_rm")))
-      var st = prevHostState
-        .join(addStats, Seq("host_hash"), "full_outer")
-      st = rmStats match {
-        case Some(r) => st.join(r, Seq("host_hash"), "full_outer")
-        case None    => st.withColumn("d_rm", lit(0L))
-      }
-      st = nextMins match {
-        case Some(nm) => st.join(nm, Seq("host_hash"), "full_outer")
-        case None     => st.withColumn("bmin_next", lit(null).cast(
-          "struct<priority:int,warc_ts:timestamp,url_hash:bigint>"))
-      }
-      // refilled hosts get the freshly-scanned minimum (null = drained;
-      // already covers entries added this round — they were in the pool);
-      // everyone else keeps least(old bmin, this round's added minimum)
-      val withRefilled = refillNeeds match {
-        case Some(rn) => st.join(rn.select(col("host_hash"),
-          lit(true).as("was_refilled")), Seq("host_hash"), "left")
-        case None => st.withColumn("was_refilled", lit(false))
-      }
-      withRefilled
-        .select(col("host_hash"),
-          (coalesce(col("backlog_count"), lit(0L)) +
-            coalesce(col("d_add"), lit(0L)) -
-            coalesce(col("d_rm"), lit(0L))).as("backlog_count"),
-          when(coalesce(col("was_refilled"), lit(false)), col("bmin_next"))
-            .otherwise(least(col("bmin"), col("add_min"))).as("bmin"))
-        .filter(col("backlog_count") > 0)
-        .coalesce(1) // tiny table; one valid footer even when empty
-        .write.mode("overwrite").parquet(path("host_state"))
-    }
-
-    val selectedCount = Await.result(selectedCountF, Duration.Inf)
-    val lineageRows = Await.result(lineageF, Duration.Inf)
-    val (deltaBloom, newCount) = Await.result(bloomCountF, Duration.Inf)
-    Await.result(missesF, Duration.Inf)
-    Await.result(seenWriteF, Duration.Inf)
-    val overflowCount = Await.result(backlogWriteF, Duration.Inf)
-    val rmCount = Await.result(rmCountF, Duration.Inf)
-    Await.result(hostStateF, Duration.Inf)
-    // the optimistic head write must be durable before run() returns —
-    // the caller's manifest commit makes this round visible to resume
-    Await.result(headWriteF, Duration.Inf)
-    lap("await-side")
-
-    val fetchedCount = lineageRows.map(_.getLong(1)).sum
-    val discoveredCount = lineageRows.map(_.getLong(2)).sum
-    // Contract: `pages` has unique (host_bucket, url) rows — the corpus
-    // writer guarantees it and the generator derives urls from unique ids.
-    // A duplicate page row would multiply join hits and drive this
-    // negative, silently corrupting the driver loop's termination
-    // arithmetic, so fail loudly instead (ADVICE r1).
-    val errorCount = selectedCount - fetchedCount
-    require(errorCount >= 0,
-      s"round $round: fetched ($fetchedCount) > selected ($selectedCount); " +
-        "pages table violates the unique-(host_bucket,url) contract")
-    val dedupedCount = discoveredCount - newCount
-    // all frontier bookkeeping is arithmetic — no count jobs on big tables
-    // (overflowCount = rows added to backlog; rmCount = rows promoted out)
-    val pending = state.pending - selectedCount + newCount
-    val backlogPending = state.backlogPending + overflowCount - rmCount
-    val newState = FrontierState(pending, pending - backlogPending,
-      backlogPending, state.backlogPhysRows + overflowCount, state.baseRound)
-
-    val lineage = lineageRows.map(r =>
-      PartitionLineage(round, r.getInt(0), r.getLong(1), 0L, 0L)).toSeq :+
-      PartitionLineage(round, -1, 0L, dedupedCount, errorCount)
-
-    ranked.unpersist(); selectedP.unpersist(); newEntries.unpersist()
-    probed.unpersist(); mergedP.foreach(_.unpersist()); overHosts.unpersist()
-    mergedCounts.unpersist()
-    overRanked.foreach(_.unpersist()); prankedP.foreach(_.unpersist())
-    backlogAdd.unpersist()
-    refillNeeds.foreach(_.unpersist()); newWorse.unpersist()
-    prevHostState.unpersist()
-    rmRows.foreach(_.unpersist())
-
-    RoundResult(selectedCount, fetchedCount, errorCount, discoveredCount,
-      newCount, dedupedCount, overflowCount, rmCount, newState,
-      deltaBloom, lineage, suspectCount = nSuspects)
   }
 }

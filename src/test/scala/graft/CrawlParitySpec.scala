@@ -166,6 +166,30 @@ class CrawlParitySpec extends AnyFunSuite {
     }
   }
 
+  test("global budget: per-round fetch sets, misses and seen set ≡ oracle") {
+    val spark = TestSpark.spark
+    val gcfg = cfg.copy(globalBudget = 5, maxRounds = 80)
+    val gsim = ReferenceSimulator.run(spec, seeds, gcfg)
+    // the cap really binds: the uncapped oracle fetches more in some round
+    assert(sim.fetchOrder.groupBy(_._1).values.exists(_.size > 5))
+    val pagesPath = TestSpark.tmpDir("pages-global")
+    CorpusWriter.write(spark, spec, pagesPath, numPartitions = 4)
+    val wh = TestSpark.tmpDir("wh-global")
+    val summary = CrawlLoop.run(spark, CorpusWriter.read(spark, pagesPath),
+      seeds, gcfg, wh, expectedUrls = 1L << 16)
+    assert(summary.rounds == gsim.rounds)
+    val log = Snapshots.readLatestTable(spark, wh, "fetch_log").get
+      .select("round", "url", "status").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSet
+    assert(log.filter(_._3 == "fetched").map(r => (r._1, r._2)) ==
+      gsim.fetchOrder.toSet)
+    assert(log.filter(_._3 == "miss").map(r => (r._1, r._2)) ==
+      gsim.misses.toSet)
+    val seen = Snapshots.readLatestTable(spark, wh, "seen_delta").get
+      .collect().map(_.getLong(0)).toSet
+    assert(seen == gsim.seen)
+  }
+
   test("resume-from-snapshot ≡ uninterrupted run (checkpoint equivalence)") {
     val spark = TestSpark.spark
     val pagesPath = TestSpark.tmpDir("pages2")
