@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * `spark.range(pageCount)` → `pageAt(i)` is embarrassingly parallel: no
   * shuffle, no skew, linear in page count — the 10^10 design point is the
   * same plan with more range partitions. The table is written
-  * disk-partitioned by `host_bucket` so the crawl round's fetch join gets
-  * partition pruning (only buckets containing selected hosts are read).
+  * disk-partitioned by `host_bucket`, the fetch join's co-location key, so
+  * a reader that filters on it skips whole buckets.
   */
 object CorpusWriter {
 

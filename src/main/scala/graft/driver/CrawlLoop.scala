@@ -66,7 +66,7 @@ object CrawlLoop {
         // headCount = -1: CrawlRound treats headCount >= 0 as a TRUSTED
         // upper bound on the selected slice (broadcast gate + Bloom
         // sizing); with no manifest there is no bound, so force the
-        // serial selectedP.count() fallback rather than a 0-bound that
+        // serial exact selected count rather than a 0-bound that
         // would ungate the broadcast on an arbitrarily large head
         case None => CrawlRound.FrontierState(-1L, -1L, 0L, 0L, -1)
       }

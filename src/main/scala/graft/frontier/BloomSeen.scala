@@ -1,15 +1,12 @@
 package graft.frontier
 
 import graft.core.XxHash64
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions
+import org.apache.spark.sql.Column
 
-/** From-scratch Bloom filter over 64-bit url hashes + a typed Spark
-  * [[Aggregator]] that builds one distributed (per-partition build,
-  * tree-merge, single byte-array result) — the engine's scalable URL-seen
-  * pre-filter (north_rule: "broadcast-merged Bloom URL-seen filter rebuilt
-  * incrementally per crawl round").
+/** From-scratch Bloom filter over 64-bit url hashes — the engine's scalable
+  * URL-seen pre-filter (north_rule: "broadcast-merged Bloom URL-seen filter
+  * rebuilt incrementally per crawl round"). The distributed build (per-
+  * partition puts, per-shard OR reduce) is [[ShardedBloom.buildShardsWithCount]].
   *
   * Exactness contract: the Bloom is an accelerator only. It has no false
   * negatives (tested by property), so `mightContain == false` proves
@@ -21,15 +18,6 @@ import org.apache.spark.sql.functions
   * big-endian via ByteBuffer. Merging = bitwise OR (same geometry).
   */
 object BloomSeen {
-
-  final case class BloomBytes(bytes: Array[Byte]) extends Serializable {
-    def numHashes: Int = java.nio.ByteBuffer.wrap(bytes).getInt(0)
-    def numBits: Long = {
-      val words = java.nio.ByteBuffer.wrap(bytes).getInt(4)
-      words.toLong * 64
-    }
-    def mightContain(v: Long): Boolean = BloomSeen.mightContain(bytes, v)
-  }
 
   /** Standard sizing: m = -n ln(p) / ln(2)^2, k = (m/n) ln(2). */
   def geometry(expectedItems: Long, fpp: Double): (Long, Int) = {
@@ -107,24 +95,6 @@ object BloomSeen {
     }
     acc
   }
-
-  /** Typed aggregator: Dataset[Long] → bloom bytes. Partial aggregation
-    * (map-side build) + merge happen inside Spark's agg machinery — no
-    * collect of raw hashes to the driver. */
-  final class BloomAggregator(expectedItems: Long, fpp: Double)
-      extends Aggregator[Long, Array[Byte], Array[Byte]] {
-    override def zero: Array[Byte] = empty(expectedItems, fpp)
-    override def reduce(b: Array[Byte], v: Long): Array[Byte] = { put(b, v); b }
-    override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = mergeInto(a, b)
-    override def finish(r: Array[Byte]): Array[Byte] = r
-    override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Column function: bloom_build(hashCol) as an aggregate expression. */
-  def bloomBuildUdaf(expectedItems: Long, fpp: Double = 0.01):
-      org.apache.spark.sql.expressions.UserDefinedFunction =
-    functions.udaf(new BloomAggregator(expectedItems, fpp), Encoders.scalaLong)
 
   /** Probe column against a TorrentBroadcast-shipped bloom — a native
     * codegen'd expression ([[graft.expressions.UrlExpressions.BloomMightContain]]),

@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   * unsigned url_hash space (shard = top k bits), so:
   *
   *  - capacity scales to any S × shard size;
-  *  - the per-round delta build is ONE distributed aggregation grouped by
-  *    the shard key (S final rows, built map-side combined on executors —
-  *    the driver only ever sees S finished bitsets, never raw hashes);
+  *  - the per-round delta build is ONE distributed job: per-partition
+  *    puts, then a per-shard OR reduce (S final filters — the driver only
+  *    ever sees S finished bitsets, never raw hashes);
   *  - round-boundary merge is a per-shard bitwise OR;
   *  - the probe ships as one broadcast of the shard array and reads
   *    exactly one shard's cache lines per row (native codegen'd
@@ -75,34 +75,38 @@ object ShardedBloom {
     acc
   }
 
-  /** Shard id as column algebra over the hash column (must agree with
-    * [[shardOf]]). */
-  def shardCol(hashCol: org.apache.spark.sql.Column,
-               numShards: Int): org.apache.spark.sql.Column =
-    if (numShards == 1) lit(0)
-    else shiftrightunsigned(hashCol,
-      64 - Integer.numberOfTrailingZeros(numShards)).cast("int")
-
-  /** Distributed build: ONE aggregation grouped by shard (partial
-    * map-side build per shard per partition, tree-merged), plus the row
-    * count in the same job. Absent shards come back as empty filters with
-    * identical geometry so merges stay well-defined. */
+  /** Distributed build, plus the row count in the same job: each input
+    * partition puts its hashes into the shards it touches, and the
+    * partial filters are OR-merged per shard (S reduce partitions, so the
+    * driver only ever sees S finished bitsets, never raw hashes). It runs
+    * on the query's internal rows ([[InternalRows]]): no encoder, and no
+    * generated code beyond the input plan's own. The filters equal those a
+    * sequential [[put]] of the same hashes builds. Absent shards come back
+    * as empty filters with identical geometry so merges stay well-defined. */
   def buildShardsWithCount(df: DataFrame, hashColName: String,
                            expectedItems: Long, numShards: Int,
                            fpp: Double = 0.01): (Array[Array[Byte]], Long) = {
-    val agg = BloomSeen.bloomBuildUdaf(
-      perShardExpected(expectedItems, numShards), fpp)
-    val rows = df
-      .groupBy(shardCol(col(hashColName), numShards).as("s"))
-      .agg(agg(col(hashColName)).as("b"), count(lit(1)).as("n"))
-      .collect()
+    val perShard = perShardExpected(expectedItems, numShards)
+    val rows = InternalRows.run(df.select(col(hashColName)))(_
+      .mapPartitions { it =>
+        val part = new Array[Array[Byte]](numShards)
+        val n = new Array[Long](numShards)
+        it.foreach { r =>
+          val h = r.getLong(0)
+          val s = shardOf(h, numShards)
+          if (part(s) == null) part(s) = BloomSeen.empty(perShard, fpp)
+          BloomSeen.put(part(s), h)
+          n(s) += 1
+        }
+        Iterator.range(0, numShards).filter(part(_) != null)
+          .map(s => (s, (part(s), n(s))))
+      }
+      .reduceByKey((a, b) => (BloomSeen.mergeInto(a._1, b._1), a._2 + b._2),
+        numShards)
+      .collect())
     val out = empty(expectedItems, fpp, numShards)
-    var total = 0L
-    rows.foreach { r =>
-      if (!r.isNullAt(1)) out(r.getInt(0)) = r.getAs[Array[Byte]](1)
-      total += r.getLong(2)
-    }
-    (out, total)
+    rows.foreach { case (s, (b, _)) => out(s) = b }
+    (out, rows.map(_._2._2).sum)
   }
 
   /** Probe column: native codegen'd expression over the broadcast shard

@@ -35,7 +35,9 @@ object Snapshots {
   /** Physical per-round tables. `fetched` is the round's working set (url,
     * lineage columns, extracted `out` struct, text_match); item tables are
     * derived VIEWS over it at read time — one write per round instead of
-    * five, O(1) jobs per round. The frontier is TIERED (TieredFrontier):
+    * five, O(1) jobs per round. `fetched` and `misses` store no round
+    * column: [[readTable]] derives it from the snap dir ([[roundOfFile]]).
+    * The frontier is TIERED (TieredFrontier):
     * `head`/`host_state` are small full-state tables, `backlog_add`/
     * `backlog_rm`/`backlog_base` are delta segments. */
   val PhysicalTables: Seq[String] =
@@ -191,7 +193,17 @@ object Snapshots {
       "backlog_rm" -> org.apache.spark.sql.types.StructType.fromDDL(
         "url_hash BIGINT, host_hash BIGINT"),
       "misses" -> org.apache.spark.sql.types.StructType.fromDDL(
-        "round INT, url STRING, url_hash BIGINT, host STRING, depth INT"))
+        "url STRING, url_hash BIGINT, host STRING, depth INT"))
+
+  /** The round a file-source row was read from: the `k` of the
+    * `snap-k/<table>/<file>` it lives in. `fetched` and `misses` store no
+    * round column — a per-round literal in the round's plan would make
+    * every round compile new code — so readers derive it from here. */
+  def roundOfFile: org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    regexp_extract(col("_metadata.file_path"), ".*/snap-(\\d+)/[^/]+/[^/]+$", 1)
+      .cast("int")
+  }
 
   private def readPhysical(spark: SparkSession, warehouse: String,
                            table: String, upToRound: Int): Option[DataFrame] = {
@@ -211,6 +223,9 @@ object Snapshots {
                 upToRound: Int): Option[DataFrame] = {
     import org.apache.spark.sql.functions._
     def fetched = readPhysical(spark, warehouse, "fetched", upToRound)
+      .map(_.withColumn("round", roundOfFile))
+    def misses = readPhysical(spark, warehouse, "misses", upToRound)
+      .map(m => m.select(roundOfFile.as("round") +: m.columns.map(col): _*))
     table match {
       case "frontier" =>
         val baseRound = readManifest(warehouse, upToRound)
@@ -225,18 +240,19 @@ object Snapshots {
       case "tieba_names" => fetched.map(
         _.select(col("url").as("user_url"),
           explode(col("out.tieba_names")).as("tieba")))
+      case "misses" => misses
       case "fetch_log" =>
         val f = fetched.map(_.select(col("round"), col("url"),
           col("url_hash"), col("host"), col("depth"),
           lit("fetched").as("status"), col("text_match")))
-        val m = readPhysical(spark, warehouse, "misses", upToRound)
-          .map(_.select(col("round"), col("url"), col("url_hash"),
-            col("host"), col("depth"), lit("miss").as("status"),
-            lit(false).as("text_match")))
+        val m = misses.map(_.select(col("round"), col("url"),
+          col("url_hash"), col("host"), col("depth"), lit("miss").as("status"),
+          lit(false).as("text_match")))
         (f, m) match {
           case (Some(a), Some(b)) => Some(a.unionByName(b))
           case (a, b) => a.orElse(b)
         }
+      case "fetched" => fetched
       case _ => readPhysical(spark, warehouse, table, upToRound)
     }
   }

@@ -107,6 +107,11 @@ object TieredFrontier {
   private def existing(paths: Seq[String]): Seq[String] =
     paths.filter(p => Files.exists(Paths.get(p)))
 
+  /** An empty host_state (no backlogged host), with one valid footer. */
+  def writeEmptyHostState(spark: SparkSession, wh: String, round: Int): Unit =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hostStateSchema)
+      .coalesce(1).write.mode("overwrite").parquet(hostStatePath(wh, round))
+
   /** Writes round `round`'s tiers from a set of frontier entries: per host
     * the first `headCap` in the politeness order form the head, the rest
     * the backlog (`backlog_add` + `host_state`). `fits` = no host can
@@ -118,8 +123,7 @@ object TieredFrontier {
     val fe = feCols.map(col)
     if (fits) {
       entries.select(fe: _*).write.mode("overwrite").parquet(headPath(wh, round))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hostStateSchema)
-        .coalesce(1).write.mode("overwrite").parquet(hostStatePath(wh, round))
+      writeEmptyHostState(spark, wh, round)
       return 0L
     }
     val ranked = entries.withColumn("rn", row_number().over(hostWindow))

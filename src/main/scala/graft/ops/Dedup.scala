@@ -386,9 +386,11 @@ object Dedup {
     * admits (pre-verification) — the structural cost [[simHashPairs]]
     * pays for popcount evaluation, for scaling evidence
     * (graft.DedupBench): near-linear growth at 10× docs is the claim the
-    * b>4 combination tables exist to keep true at corpus scale. */
+    * b>4 combination tables exist to keep true at corpus scale.
+    * `numBlocks` has no default: the count must describe the blocking the
+    * caller measured (`simHashPairs` picks 4 or 6 by corpus size). */
   def simHashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        maxHamming: Int = 3, numBlocks: Int = 4): Long = {
+                        numBlocks: Int, maxHamming: Int = 3): Long = {
     require(numBlocks > maxHamming,
       s"pigeonhole needs numBlocks ($numBlocks) > maxHamming ($maxHamming)")
     val keysUdf = udf((sim: Long) =>

@@ -1,18 +1,21 @@
 package graft.round
 
+import scala.collection.mutable
 import scala.concurrent.Future
 
 import graft.core.Crawl
-import graft.frontier.{BloomSeen, PartitionLineage, ShardedBloom, Snapshots, TieredFrontier}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.frontier.{BloomSeen, InternalRows, PartitionLineage, ShardedBloom,
+  Snapshots, TieredFrontier}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One crawl round as a declarative Dataset pipeline (north_rule):
   *
   *   canonicalize → (already canonical on insert) → per-host window rank ≤
   *   politeness budget OVER THE FRONTIER HEAD ONLY → fetch (join the
-  *   bounded selected slice against the pages table — ONE scan of pages,
-  *   adaptively partition-pruned to the active host buckets) → extract via
+  *   bounded selected slice against the pages table — ONE scan of pages)
+  *   → extract via
   *   the shared pure [[Crawl.process]] → ONE `fetched` working-set write
   *   (item tables are views derived on read — see [[Snapshots]]) → explode
   *   discovered links → Bloom pre-filter + exact confirm vs the seen set →
@@ -31,27 +34,38 @@ import org.apache.spark.sql.functions._
   *    shuffled-hash) when a burst round exceeds it — never an unconditional
   *    driver-side broadcast of an unbounded slice;
   *  - the round's CRITICAL PATH is three serial jobs — the fetch+extract
-  *    write, the suspect count (the expansion's dedup shuffle, whose
-  *    completion picks the confirm branch), and the overflow probe
-  *    (a per-host count over the cached head and new entries). The head
-  *    write runs as a CONCURRENT job over the same caches (measured -11%
-  *    wall vs the serial write in an interleaved same-binary A/B),
-  *    and everything else (lineage agg, miss log, seen delta, Bloom
-  *    delta build, backlog delta, host-state upkeep) is likewise off
-  *    the critical path; all bookkeeping counts are derived
-  *    arithmetically (pending' = pending - selected + new);
+  *    write (its first stage builds the cached ranked head), the suspect
+  *    count (the expansion's dedup shuffle, whose completion picks the
+  *    confirm branch), and the overflow probe (a per-host count over the
+  *    cached head and new entries, which also counts the head rows left
+  *    behind: selected = head − remaining, no count job of its own). The
+  *    head write runs as a CONCURRENT job over the same caches (measured
+  *    -11% wall vs the serial write in an interleaved same-binary A/B),
+  *    and everything else (lineage, miss log, seen delta, Bloom delta
+  *    build, and — only when a host overflows or the backlog is in use —
+  *    the backlog delta and host-state upkeep) is likewise off the
+  *    critical path; all bookkeeping counts are derived arithmetically
+  *    (pending' = pending - selected + new). A steady round (no
+  *    overflow, no backlog) runs about 18 Spark jobs, broadcast and
+  *    shuffle-stage jobs included;
   *  - discovered-link dedup is a groupBy on url (map-side partial agg),
   *    then a Bloom broadcast probe drops the overwhelmingly-seen majority;
   *    suspects are confirmed WITHOUT shuffling the seen table (no false
   *    negatives ⇒ correctness unaffected; see frontier/BloomSeen.scala).
+  *
+  * Generated-code budget: Spark's codegen cache holds 100 classes, and in
+  * local mode a whole-stage class takes two entries (driver compile check
+  * + executor task). A steady round uses about 77 entries; a plan that
+  * needs more makes every round recompile its own classes. Hence: no
+  * per-round literal inside a round plan (the round number is read from
+  * the snapshot dir, see [[Snapshots.roundOfFile]]), bookkeeping counts
+  * and sums run on internal rows ([[rowCount]], [[perKeySums]]) instead
+  * of as aggregation stages, and only frames read more than once are
+  * cached.
   */
 object CrawlRound {
 
   val NumHostBuckets = 64
-
-  /** Static bucket pruning pays a small pre-job; only worth it when the
-    * frontier is small enough that buckets are plausibly sparse. */
-  val PruneThreshold = 100000L
 
   /** Broadcast the selected slice into the fetch join only below this row
     * count (~30-70 MB as a JVM broadcast relation). Measured on the bench
@@ -106,41 +120,75 @@ object CrawlRound {
     * silently confirmed seen and never crawled; the 128-bit pair drops
     * the expectation to ~10^-19. The Bloom stages still key on url_hash
     * alone (a filter false positive only costs a redundant suspect, never
-    * correctness). */
+    * correctness).
+    *
+    * `rows` are the rows to filter, the suspects by default. A superset of
+    * the suspects may ride along — e.g. every candidate, the Bloom-cleared
+    * ones included: those are absent from seen, so the anti join keeps
+    * them, and one pass yields all new entries with no union. The seen
+    * match is still built from the suspects alone. */
   val ConfirmKey: Seq[String] = Seq("url_hash", "url_hash2")
 
   def confirmNew(seen: DataFrame, suspects: DataFrame,
                  nSuspects: Long,
-                 prebuiltBloom: Option[Array[Byte]] = None): DataFrame = {
+                 prebuiltBloom: Option[Array[Byte]] = None,
+                 rows: Option[DataFrame] = None): DataFrame = {
     val spark = suspects.sparkSession
+    val from = rows.getOrElse(suspects)
     if (nSuspects <= SuspectBloomGate) {
       val matchedSeen = seen
         .join(broadcast(suspects.select(ConfirmKey.map(col): _*)), ConfirmKey,
           "left_semi")
-      suspects.join(broadcast(matchedSeen), ConfirmKey, "left_anti")
+      from.join(broadcast(matchedSeen), ConfirmKey, "left_anti")
     } else {
       // burst rounds usually arrive with the suspect Bloom already
-      // built — fused into the same agg job as the suspect count, sized
+      // built — fused into the same job as the suspect count, sized
       // by the previous round's count (see run()); only a missing or
       // undersized-beyond-guard hint pays this second pass
       prebuiltBloom.orElse(countAndBloom(suspects, nSuspects, 0.001)._2) match {
-        case None => suspects // no suspect rows: nothing to confirm
+        case None => from // no suspect rows: nothing to confirm
         case Some(bytes) =>
           val bc = spark.sparkContext.broadcast(bytes)
-          suspects.join(seen.filter(BloomSeen.mightContainCol(bc,
+          from.join(seen.filter(BloomSeen.mightContainCol(bc,
             col("url_hash"))), ConfirmKey, "left_anti")
       }
     }
   }
 
   /** Row count plus a Bloom over `url_hash` (sized for at least
-    * `capacity` items) in ONE aggregation job; `None` when `df` is empty. */
+    * `capacity` items) in ONE job; `None` when `df` is empty. */
   private def countAndBloom(df: DataFrame, capacity: Long,
                             fpp: Double): (Long, Option[Array[Byte]]) = {
-    val agg = BloomSeen.bloomBuildUdaf(math.max(capacity, MinBloomItems), fpp)
-    val row = df.agg(count(lit(1)), agg(col("url_hash"))).collect()(0)
-    (row.getLong(0),
-      if (row.isNullAt(1)) None else Some(row.getAs[Array[Byte]](1)))
+    val (shards, n) = ShardedBloom.buildShardsWithCount(df, "url_hash",
+      math.max(capacity, MinBloomItems), numShards = 1, fpp)
+    (n, if (n == 0) None else Some(shards(0)))
+  }
+
+  /** `df`'s row count, as a job on its internal rows ([[InternalRows]]). */
+  private def rowCount(df: DataFrame): Long =
+    InternalRows.run(df.select())(_.count())
+
+  /** Per-key sums of `df`'s long columns after the first (the key), as a
+    * job on its internal rows ([[InternalRows]]) — for the round's
+    * bookkeeping aggregates. `finish` runs the action on the per-key sums. */
+  private def perKeySums[T](df: DataFrame)(
+      finish: RDD[(Long, Array[Long])] => T): T = {
+    val width = df.columns.length - 1
+    def add(a: Array[Long], b: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < width) { a(i) += b(i); i += 1 }
+      a
+    }
+    InternalRows.run(df) { rows =>
+      finish(rows.mapPartitions { it =>
+        val acc = mutable.HashMap.empty[Long, Array[Long]]
+        it.foreach { r =>
+          add(acc.getOrElseUpdate(r.getLong(0), new Array[Long](width)),
+            Array.tabulate(width)(i => r.getLong(i + 1)))
+        }
+        acc.iterator
+      }.reduceByKey(add _))
+    }
   }
 
   /** Floor on every Bloom the round sizes from a row count or bound. */
@@ -267,7 +315,7 @@ object CrawlRound {
         robots, suspectHint)
       val merge = p.mergeOverflow(sel.remaining, exp.newEntries)
       val refill = p.refillReconcile(merge)
-      p.sideWrites(fetch, exp, merge, refill)
+      p.sideWrites(sel, fetch, exp, merge, refill)
     }
 
   private val feColsC = TieredFrontier.feCols.map(col)
@@ -275,14 +323,20 @@ object CrawlRound {
   // values the phases hand to each other
   private final case class Selection(selected: DataFrame, remaining: DataFrame,
                                      gateCount: Long, pages: DataFrame)
-  private final case class Fetch(fetched: DataFrame, selectedCount: Future[Long],
-                                 lineage: Future[Array[Row]])
+  /** `lineage`: (fetch partition, pages, links) per fetch partition. */
+  private final case class Fetch(fetched: DataFrame,
+                                 lineage: Future[Seq[(Int, Long, Long)]])
   private final case class Expansion(newEntries: DataFrame, nSuspects: Long,
       deltaBloom: Future[(Option[Array[Array[Byte]]], Long)])
-  private final case class Merge(prevHostState: DataFrame, newWorse: DataFrame,
-                                 kept: DataFrame, overflow: DataFrame,
-                                 noOverflow: Boolean, mergedCounts: DataFrame,
-                                 headWrite: Future[Unit])
+  /** `newWorse` and `overflow` are None when known empty; `remainingCount`
+    * is the number of head rows the selection left behind. */
+  private final case class Merge(prevHostState: DataFrame,
+                                 newWorse: Option[DataFrame], kept: DataFrame,
+                                 overflow: Option[DataFrame],
+                                 mergedCounts: DataFrame, remainingCount: Long,
+                                 headWrite: Future[Unit]) {
+    def noOverflow: Boolean = overflow.isEmpty
+  }
   /** `rows` carries `from_backlog`; `rm` = the picks taken off the backlog;
     * `nextMin` = each refilled host's new backlog minimum. */
   private final case class Picks(rows: DataFrame, rm: DataFrame,
@@ -302,8 +356,9 @@ object CrawlRound {
       * the optional global cap in the same order. */
     def select(head: DataFrame, pages: DataFrame): Selection =
       scope.phase("select") {
-        // one window shuffle, reused
+        // one window shuffle, cached once; `selected` is a filter over it
         val ranked = scope.persist(head.select(feColsC: _*)
+          .withColumn("host_bucket", hostBucketCol(col("host_hash")))
           .withColumn("rn", row_number().over(TieredFrontier.hostWindow)))
         val within = ranked.filter(col("rn") <= cfg.perHostBudget).drop("rn")
         val beyond = ranked.filter(col("rn") > cfg.perHostBudget).drop("rn")
@@ -315,57 +370,42 @@ object CrawlRound {
             (capped, beyond.unionByName(within.join(capped.select("url_hash"),
               Seq("url_hash"), "left_anti")))
           }
-        val selectedP = scope.persist(
-          selected.withColumn("host_bucket", hostBucketCol(col("host_hash"))))
         // The broadcast gate needs a row bound BEFORE the fetch join, but the
         // EXACT selected count is only bookkeeping (error/pending arithmetic,
         // consumed after the fetch write). The manifest's headCount bounds
         // selected from above (selection ranks within the head), so the gate
         // decision — and the selected-slice Bloom's sizing above the gate —
-        // use the bound, and the exact count runs as a CONCURRENT job: one
-        // serial head-size barrier removed from EVERY round (measured
-        // 2-8 s/round of serial time in above-gate rounds at cluster job
-        // latencies). Conservative in the bound direction only: a round whose
+        // use the bound, and the exact count comes later and for free from
+        // the overflow probe (selected = head − remaining): no serial
+        // head-size barrier in any round (one cost 2-8 s/round of serial
+        // time in above-gate rounds at cluster job latencies).
+        // Conservative in the bound direction only: a round whose
         // head exceeds the gate but whose selected slice is under it takes
         // the Bloom-prefiltered join instead of the broadcast — correct, and
         // the Bloom oversize is capped by HeadFactor. The serial count
         // survives only when no manifest bound exists (headCount < 0).
         val gateCount =
           if (state.headCount >= 0) state.headCount
-          else selectedP.count() // no-manifest fallback: serial exact count
-
-        // adaptive static bucket pruning: one tiny pre-job when the frontier
-        // is small (sparse buckets likely); full scan + join otherwise
-        val pagesBase = withHostBucket(pages)
-        val pagesPruned =
-          if (state.pending < 0 || state.pending >= PruneThreshold) pagesBase
-          else pagesBase.filter(col("host_bucket").isin(selectedP
-            .select("host_bucket").distinct().collect().map(_.getInt(0))
-            .sorted.map(Int.box).toSeq: _*))
-        Selection(selectedP, remaining, gateCount, pagesPruned)
+          else rowCount(selected) // no-manifest fallback: serial exact count
+        // No bucket pruning before the join: a pre-job collecting the
+        // selected buckets cost more than the pages scan it saved (crawl_deep,
+        // 4 of 4 interleaved pairs), and its IN list made every round's plan
+        // new code. The broadcast fetch join reads every bucket.
+        Selection(selected, remaining, gateCount, withHostBucket(pages))
       }
 
     /** pages ⋈ selected (size-gated broadcast), extracted via the shared
       * pure [[Crawl.process]] and written once as `fetched`. */
     def fetchExtract(sel: Selection): Fetch = scope.phase("fetch") {
-      // Above-gate rounds need a selected-slice Bloom BEFORE the fetch job;
-      // the exact selected count is also wanted (error/pending bookkeeping,
-      // consumed after the fetch write). One combined agg returns (count,
-      // bloom) in a single pass — two jobs racing over the not-yet-
-      // materialized cached slice would each compute window partitions —
+      // Above-gate rounds need a selected-slice Bloom BEFORE the fetch job,
       // sized by the manifest bound that is known before the pass starts.
-      // Below the gate the count is a concurrent job, off the critical path.
+      // The exact selected count is never a job of its own: it is derived
+      // from the overflow probe's remaining count (see sideWrites).
       graft.expressions.UrlExpressions.register(spark)
-      val (selectedBloom, selectedCount) =
-        if (sel.gateCount > BroadcastRowGate) {
-          val (n, b) = countAndBloom(sel.selected, sel.gateCount, 0.01)
-          (b, Future.successful(n))
-        } else (None,
-          // no-manifest fallback already paid an exact serial count for the
-          // gate — reuse it instead of a second (cached, but still a job)
-          // count in the concurrent future
-          if (state.headCount < 0) Future.successful(sel.gateCount)
-          else scope.future("selected-count")(sel.selected.count()))
+      val selectedBloom =
+        if (sel.gateCount > BroadcastRowGate)
+          countAndBloom(sel.selected, sel.gateCount, 0.01)._2
+        else None
       val hits = fetchJoin(sel.pages,
         sel.selected.select("host_bucket", "url", "url_hash", "host",
           "host_hash", "depth", "priority"),
@@ -394,7 +434,6 @@ object CrawlRound {
           if (cfg.verifyText) col("out.text") === col("page_text")
           else lit(true))
         .withColumn("partition_id", spark_partition_id())
-        .withColumn("round", lit(round))
         .drop((Seq("html") ++
           (if (cfg.verifyText) Seq("page_text") else Nil)): _*)
       fetchedOut.write.mode("overwrite")
@@ -404,9 +443,11 @@ object CrawlRound {
       // re-read with the schema we just wrote: no footer-inference job
       val fetched = spark.read.schema(fetchedOut.schema).parquet(path("fetched"))
       val lineage = scope.future("lineage") {
-        fetched.groupBy(col("partition_id"))
-          .agg(count(lit(1)).as("fetched"),
-            sum(size(col("out.links"))).as("links")).collect()
+        perKeySums(fetched.select(col("partition_id").cast("long"),
+          lit(1L).as("pages"), size(col("out.links")).cast("long")))(_.collect())
+          .toSeq
+          .map { case (pid, Array(pages, links)) => (pid.toInt, pages, links) }
+          .sortBy(_._1)
       }
       scope.future("misses") {
         // same size gate as the fetch join: fetched ≤ selected rows, so an
@@ -421,11 +462,10 @@ object CrawlRound {
           else fetchedHashes
         sel.selected
           .join(side, Seq("url_hash", "url"), "left_anti")
-          .select(lit(round).as("round"), col("url"), col("url_hash"),
-            col("host"), col("depth"))
+          .select(col("url"), col("url_hash"), col("host"), col("depth"))
           .write.mode("overwrite").parquet(path("misses"))
       }
-      Fetch(fetched, selectedCount, lineage)
+      Fetch(fetched, lineage)
     }
 
     /** Discovered links → in-round dedup → Bloom probe → exact confirm of
@@ -436,10 +476,16 @@ object CrawlRound {
                       suspectHint: Long): Expansion = scope.phase("expand") {
       // native Catalyst expressions (codegen'd, same kernels as the oracle)
       // for the per-link hot path — see graft.expressions.UrlExpressions
+      // discovered_round is this round, read from the snapshot dir the
+      // fetched rows live in: a lit(round) would make every round's plan
+      // new code to compile
       val rawLinks = fetched.select(col("url").as("parent_url"),
-          col("page_warc_ts").as("warc_ts"), explode(col("out.links")).as("l"))
+          col("page_warc_ts").as("warc_ts"),
+          Snapshots.roundOfFile.as("discovered_round"),
+          explode(col("out.links")).as("l"))
         .select(col("l.url").as("url"), col("l.depth").as("depth"),
-          col("l.priority").as("priority"), col("parent_url"), col("warc_ts"))
+          col("l.priority").as("priority"), col("parent_url"), col("warc_ts"),
+          col("discovered_round"))
 
       // robots gate (T3) at ENQUEUE time: blocked urls never enter the
       // frontier or the seen set (default off — ROBOTSTXT_OBEY=False in the
@@ -452,19 +498,20 @@ object CrawlRound {
           rawLinks.filter(expr("graft_robots_allowed(url)"))
         } else rawLinks
 
-      // in-round dedup: one deterministic representative per url (min struct)
+      // in-round dedup: one deterministic representative per url (min
+      // struct; discovered_round is the same on every row)
       val candidates = gatedLinks
         .groupBy(col("url"))
         .agg(min(struct(col("priority"), col("warc_ts"), col("depth"),
-          col("parent_url"))).as("m"))
+          col("parent_url"), col("discovered_round"))).as("m"))
         .select(col("url"), col("m.priority").as("priority"),
           col("m.warc_ts").as("warc_ts"), col("m.depth").as("depth"),
-          col("m.parent_url").as("parent_url"))
+          col("m.parent_url").as("parent_url"),
+          col("m.discovered_round").as("discovered_round"))
         .withColumn("url_hash", expr("graft_url_hash(url)"))
         .withColumn("url_hash2", expr("graft_url_hash2(url)"))
         .withColumn("host", expr("graft_url_host(url)"))
         .withColumn("host_hash", expr("graft_url_hash(host)"))
-        .withColumn("discovered_round", lit(round))
 
       // Bloom pre-filter (broadcast probe); suspects confirmed WITHOUT
       // shuffling the seen table in ANY regime (see confirmNew).
@@ -482,18 +529,18 @@ object CrawlRound {
       // its job completion here is what keeps the gate decision sharp.
       // The CACHE sits on `probed` (all candidates + flag), not on the
       // suspects slice: one expansion pass — explode, dedup shuffle,
-      // Bloom probe — feeds both slices; the count below materializes it.
+      // Bloom probe — feeds the suspects and the confirm; the count below
+      // materializes it.
       val bloomBc = spark.sparkContext.broadcast(bloom)
       val probed = scope.persist(candidates.withColumn("maybe_seen",
         ShardedBloom.mightContainCol(bloomBc, col("url_hash"))))
-      val definitelyNew = probed.filter(!col("maybe_seen")).drop("maybe_seen")
       val suspects = probed.filter(col("maybe_seen")).drop("maybe_seen")
       // The suspect count is the serial barrier that picks the confirm
       // branch; burst rounds (count > SuspectBloomGate) additionally need
       // a Bloom over the suspect hashes before the seen scan. When the
       // PREVIOUS round was a burst (suspectHint, threaded by CrawlLoop —
       // crawls are strongly round-correlated), build that Bloom inside the
-      // SAME agg job as the count, sized by the hint — one cache-scan
+      // SAME job as the count, sized by the hint — one cache-scan
       // instead of two serial jobs. An over-capacity Bloom only degrades
       // fpp (never false negatives), but a degraded prefilter would let
       // too much of the seen scan into the anti join, so a count past the
@@ -504,15 +551,16 @@ object CrawlRound {
           val cap = math.max(suspectHint * 2, MinBloomItems)
           val (n, b) = countAndBloom(suspects, cap, 0.001)
           (n, b.filter(_ => n <= cap))
-        } else (suspects.count(), None)
-      val confirmedNew =
-        if (nSuspects == 0) suspects
-        else confirmNew(seen, suspects, nSuspects, fusedBloom)
+        } else (rowCount(suspects), None)
+      // the confirm filters every candidate in one pass: the Bloom-cleared
+      // ones are absent from seen, so they pass the anti join untouched
+      val confirmed =
+        if (nSuspects == 0) probed
+        else confirmNew(seen, suspects, nSuspects, fusedBloom, Some(probed))
       // url_hash2 rides along ONLY into seen_delta (the confirm pair key);
       // the frontier schema stays url_hash-only
-      val feCols2 = feColsC :+ col("url_hash2")
-      val newEntries = scope.persist(definitelyNew.select(feCols2: _*)
-        .unionByName(confirmedNew.select(feCols2: _*)))
+      val newEntries = scope.persist(
+        confirmed.select(feColsC :+ col("url_hash2"): _*))
 
       // delta Bloom + new count in ONE small job over the cached delta;
       // delta shards share the cumulative filter's shard count + geometry
@@ -543,17 +591,26 @@ object CrawlRound {
       * O(head + new) — backlog size irrelevant. */
     def mergeOverflow(remaining: DataFrame, newEntries: DataFrame): Merge =
       scope.phase("merge") {
-        val prevHostState = scope.persist(
-          TieredFrontier.readHostState(spark, warehouse, round - 1))
-        val key = TieredFrontier.keyCol
-        val newWithMin = newEntries.join(
-          prevHostState.filter(col("backlog_count") > 0)
-            .select(col("host_hash"), col("bmin")),
-          Seq("host_hash"), "left")
-        val newBetter = newWithMin
-          .filter(col("bmin").isNull || key < col("bmin")).drop("bmin")
-        val newWorse = scope.persist(newWithMin
-          .filter(col("bmin").isNotNull && key > col("bmin")).drop("bmin"))
+        // not cached: a tiny parquet table, cheaper to re-read than to
+        // cache and scan
+        val prevHostState =
+          TieredFrontier.readHostState(spark, warehouse, round - 1)
+        // host_state lists backlogged hosts only, so with an empty backlog
+        // (exact manifest arithmetic) every new entry competes for the head
+        // and the bmin join is skipped
+        val (newBetter, newWorse) =
+          if (state.backlogPending <= 0) (newEntries, None)
+          else {
+            val key = TieredFrontier.keyCol
+            val newWithMin = newEntries.join(
+              prevHostState.filter(col("backlog_count") > 0)
+                .select(col("host_hash"), col("bmin")),
+              Seq("host_hash"), "left")
+            (newWithMin.filter(col("bmin").isNull || key < col("bmin"))
+              .drop("bmin"),
+              Some(newWithMin.filter(col("bmin").isNotNull && key > col("bmin"))
+                .drop("bmin")))
+          }
 
         // merged is NOT cached in the common no-overflow round: a
         // full-row (url + parent_url strings) cache WRITE of the whole next
@@ -590,23 +647,32 @@ object CrawlRound {
         // passes straight through and the O(n log n) per-host sort is
         // skipped; only over-cap hosts' rows (burst rounds) pay the window.
         // The counts aggregate the host_hash column of the two CACHED inputs
-        // (same multiset as merged, no full-row materialization). They are
+        // (same multiset as merged, no full-row materialization); the same
+        // job counts the remaining head rows, from which the exact selected
+        // count follows (selected + remaining = head). They are
         // NOT cached before the probe: the probe may be the first reader of
         // newEntries, and a thread building a cache layered on newEntries
         // while another thread's newEntries build fails deadlocks the
         // driver (Spark clears the dependent caches under the failing
         // cache's lock) instead of failing the round. Only burst rounds
         // cache the over-cap hosts, once the probe has built newEntries.
+        def hostRows(df: DataFrame, remainingRow: Long) =
+          df.select(col("host_hash"), lit(1L).as("n"), lit(remainingRow).as("r"))
+        val (remainingCount, maxPerHost) = perKeySums(
+            hostRows(remaining, 1L).unionByName(hostRows(newBetter, 0L)))(
+          _.values.aggregate((0L, 0L))(
+            { case ((r, mx), Array(n, nr)) => (r + nr, math.max(mx, n)) },
+            { case ((r1, m1), (r2, m2)) => (r1 + r2, math.max(m1, m2)) }))
+        // the per-host counts again, for the burst and refill paths
         val mergedCounts = remaining.select(col("host_hash"))
           .unionByName(newBetter.select(col("host_hash")))
           .groupBy(col("host_hash"))
           .agg(count(lit(1)).as("n"))
-        val overCap = mergedCounts.filter(col("n") > headCap).select("host_hash")
-        val noOverflow = overCap.isEmpty
         val (kept, overflow) =
-          if (noOverflow) (merged, merged.limit(0))
+          if (maxPerHost <= headCap) (merged, None)
           else {
-            val overHosts = scope.persist(overCap)
+            val overHosts = scope.persist(
+              mergedCounts.filter(col("n") > headCap).select("host_hash"))
             val mp = scope.persist(merged)
             // AQE broadcasts overHosts when few hosts burst (the usual case)
             val over = scope.persist(
@@ -614,10 +680,10 @@ object CrawlRound {
                 .withColumn("rn", row_number().over(TieredFrontier.hostWindow)))
             (mp.join(overHosts, Seq("host_hash"), "left_anti")
               .unionByName(over.filter(col("rn") <= headCap).drop("rn")),
-              over.filter(col("rn") > headCap).drop("rn"))
+              Some(over.filter(col("rn") > headCap).drop("rn")))
           }
-        Merge(prevHostState, newWorse, kept, overflow, noOverflow,
-          mergedCounts, headWrite)
+        Merge(prevHostState, newWorse, kept, overflow, mergedCounts,
+          remainingCount, headWrite)
       }
 
     /** Refill hosts whose kept head dropped below the budget but still have
@@ -679,16 +745,16 @@ object CrawlRound {
 
     /** The refill pool ranked per host against each host's `need`. */
     private def pick(backlog: DataFrame, needs: DataFrame,
-                     newWorse: DataFrame): Picks = {
+                     newWorse: Option[DataFrame]): Picks = {
       // map-side partial top-k: only the best rows per (input partition,
       // host) reach the exact window — the refill shuffle is
       // O(headCap × refill hosts), not O(backlog). Keep headCap+1 so rank
       // need+1 (the next backlog minimum) always survives.
-      val pool = TieredFrontier.localTopKPerHost(
+      val fromBacklog = TieredFrontier.localTopKPerHost(
           backlog.select(feColsC: _*), headCap + 1)
         .select(feColsC :+ lit(true).as("from_backlog"): _*)
-        .unionByName(
-          newWorse.select(feColsC :+ lit(false).as("from_backlog"): _*))
+      val pool = newWorse.fold(fromBacklog)(nw => fromBacklog.unionByName(
+        nw.select(feColsC :+ lit(false).as("from_backlog"): _*)))
       val pranked = scope.persist(pool
         .join(needs.select("host_hash", "need"), Seq("host_hash"))
         .withColumn("rn", row_number().over(TieredFrontier.hostWindow)))
@@ -702,71 +768,88 @@ object CrawlRound {
       Picks(rows, rm,
         pranked.filter(col("rn") === col("need") + 1)
           .select(col("host_hash"), TieredFrontier.keyCol.as("bmin_next")),
-        scope.future("refill-count")(rm.count()))
+        scope.future("refill-count")(rowCount(rm)))
+    }
+
+    /** host_state' = host_state + this round's backlog adds − refill picks,
+      * with each host's new backlog minimum. */
+    private def writeHostState(backlogAdd: DataFrame, prevHostState: DataFrame,
+                               r: Refill): Unit = {
+      val addStats = backlogAdd.groupBy(col("host_hash"))
+        .agg(count(lit(1)).as("d_add"),
+          min(TieredFrontier.keyCol).as("add_min"))
+      val st0 = prevHostState.join(addStats, Seq("host_hash"), "full_outer")
+      val st = r.picks match {
+        case Some(p) => st0
+          .join(p.rm.groupBy(col("host_hash")).agg(count(lit(1)).as("d_rm")),
+            Seq("host_hash"), "full_outer")
+          .join(p.nextMin, Seq("host_hash"), "full_outer")
+        case None => st0.withColumn("d_rm", lit(0L))
+          .withColumn("bmin_next", lit(null).cast(TieredFrontier.keyType))
+      }
+      // refilled hosts get the freshly-scanned minimum (null = drained;
+      // already covers entries added this round — they were in the pool);
+      // everyone else keeps least(old bmin, this round's added minimum)
+      val withRefilled = r.needs match {
+        case Some(rn) => st.join(rn.select(col("host_hash"),
+          lit(true).as("was_refilled")), Seq("host_hash"), "left")
+        case None => st.withColumn("was_refilled", lit(false))
+      }
+      withRefilled
+        .select(col("host_hash"),
+          (coalesce(col("backlog_count"), lit(0L)) +
+            coalesce(col("d_add"), lit(0L)) -
+            coalesce(col("d_rm"), lit(0L))).as("backlog_count"),
+          when(coalesce(col("was_refilled"), lit(false)), col("bmin_next"))
+            .otherwise(least(col("bmin"), col("add_min"))).as("bmin"))
+        .filter(col("backlog_count") > 0)
+        .coalesce(1) // tiny table; one valid footer even when empty
+        .write.mode("overwrite").parquet(path("host_state"))
     }
 
     /** Backlog deltas + host-state upkeep off the critical path, then the
       * bookkeeping — all counts arithmetic, no count jobs on big tables. */
-    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge,
+    def sideWrites(sel: Selection, fetch: Fetch, exp: Expansion, m: Merge,
                    r: Refill): RoundResult = scope.phase("side-writes") {
       // backlog additions: head overflow + new entries that rank behind the
-      // backlog minimum, MINUS any promoted during refill
-      val newWorse = m.newWorse.select(feColsC: _*)
-      val backlogAdd = scope.persist(m.overflow
-        .unionByName(r.picks match {
-          case Some(p) => newWorse.join(p.rows.filter(!col("from_backlog"))
-            .select("url_hash"), Seq("url_hash"), "left_anti")
-          case None => newWorse
-        })
-        .withColumn("host_bucket", hostBucketCol(col("host_hash"))))
+      // backlog minimum, MINUS any promoted during refill; None when both
+      // are known empty (no overflow, no backlog — the common round)
+      val worseKept = m.newWorse.map { nw =>
+        val w = nw.select(feColsC: _*)
+        r.picks.fold(w)(p => w.join(p.rows.filter(!col("from_backlog"))
+          .select("url_hash"), Seq("url_hash"), "left_anti"))
+      }
+      val backlogAdd = (m.overflow.toSeq ++ worseKept).reduceOption(_ unionByName _)
+        .map(a => scope.persist(
+          a.withColumn("host_bucket", hostBucketCol(col("host_hash")))))
 
       // the overflow count (bookkeeping) rides the same future as the
       // write — never a serial job between the head write and the side jobs
       val backlogWrite = scope.future("backlog") {
-        val overflowCount = backlogAdd.count()
+        val overflowCount = backlogAdd.fold(0L)(rowCount)
         if (overflowCount > 0)
-          backlogAdd.write.mode("overwrite").partitionBy("host_bucket")
+          backlogAdd.get.write.mode("overwrite").partitionBy("host_bucket")
             .parquet(path("backlog_add"))
         r.picks.foreach(_.rm.write.mode("overwrite").parquet(path("backlog_rm")))
         overflowCount
       }
       scope.future("host-state") {
-        val addStats = backlogAdd.groupBy(col("host_hash"))
-          .agg(count(lit(1)).as("d_add"),
-            min(TieredFrontier.keyCol).as("add_min"))
-        val st0 = m.prevHostState.join(addStats, Seq("host_hash"), "full_outer")
-        val st = r.picks match {
-          case Some(p) => st0
-            .join(p.rm.groupBy(col("host_hash")).agg(count(lit(1)).as("d_rm")),
-              Seq("host_hash"), "full_outer")
-            .join(p.nextMin, Seq("host_hash"), "full_outer")
-          case None => st0.withColumn("d_rm", lit(0L))
-            .withColumn("bmin_next", lit(null).cast(TieredFrontier.keyType))
+        backlogAdd match {
+          // no adds, hence no refill either (it needs a backlog): the
+          // previous host_state is empty and stays so
+          case None => TieredFrontier.writeEmptyHostState(spark, warehouse, round)
+          case Some(add) => writeHostState(add, m.prevHostState, r)
         }
-        // refilled hosts get the freshly-scanned minimum (null = drained;
-        // already covers entries added this round — they were in the pool);
-        // everyone else keeps least(old bmin, this round's added minimum)
-        val withRefilled = r.needs match {
-          case Some(rn) => st.join(rn.select(col("host_hash"),
-            lit(true).as("was_refilled")), Seq("host_hash"), "left")
-          case None => st.withColumn("was_refilled", lit(false))
-        }
-        withRefilled
-          .select(col("host_hash"),
-            (coalesce(col("backlog_count"), lit(0L)) +
-              coalesce(col("d_add"), lit(0L)) -
-              coalesce(col("d_rm"), lit(0L))).as("backlog_count"),
-            when(coalesce(col("was_refilled"), lit(false)), col("bmin_next"))
-              .otherwise(least(col("bmin"), col("add_min"))).as("bmin"))
-          .filter(col("backlog_count") > 0)
-          .coalesce(1) // tiny table; one valid footer even when empty
-          .write.mode("overwrite").parquet(path("host_state"))
       }
 
-      val selectedCount = scope.await(fetch.selectedCount)
+      // selected + remaining = head (exact manifest arithmetic); the
+      // no-manifest fallback counted the selection exactly for the gate
+      val selectedCount =
+        if (state.headCount >= 0) state.headCount - m.remainingCount
+        else sel.gateCount
       val lineageRows = scope.await(fetch.lineage)
-      val fetchedCount = lineageRows.map(_.getLong(1)).sum
-      val discoveredCount = lineageRows.map(_.getLong(2)).sum
+      val fetchedCount = lineageRows.map(_._2).sum
+      val discoveredCount = lineageRows.map(_._3).sum
       // Contract: `pages` has unique (host_bucket, url) rows — the corpus
       // writer guarantees it and the generator derives urls from unique ids.
       // A duplicate page row would multiply join hits and drive this
@@ -786,8 +869,8 @@ object CrawlRound {
       val newState = FrontierState(pending, pending - backlogPending,
         backlogPending, state.backlogPhysRows + overflowCount, state.baseRound)
 
-      val lineage = lineageRows.map(r =>
-        PartitionLineage(round, r.getInt(0), r.getLong(1), 0L, 0L)).toSeq :+
+      val lineage = lineageRows.map { case (pid, pages, _) =>
+        PartitionLineage(round, pid, pages, 0L, 0L) } :+
         PartitionLineage(round, -1, 0L, dedupedCount, errorCount)
 
       // the remaining side writes (misses, seen_delta, head, host_state)

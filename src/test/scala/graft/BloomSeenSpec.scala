@@ -1,6 +1,6 @@
 package graft
 
-import graft.frontier.BloomSeen
+import graft.frontier.{BloomSeen, ShardedBloom}
 import org.scalatest.funsuite.AnyFunSuite
 
 class BloomSeenSpec extends AnyFunSuite {
@@ -31,14 +31,14 @@ class BloomSeenSpec extends AnyFunSuite {
     assert((0 until 1000).forall(i => BloomSeen.mightContain(m, i.toLong * 7)))
   }
 
-  test("distributed aggregator equals driver-side build") {
+  test("distributed build equals driver-side build") {
     val spark = TestSpark.spark
     import spark.implicits._
     val hashes = (0 until 5000).map(i => graft.core.XxHash64.hashLong(i.toLong, 9L))
-    val agg = BloomSeen.bloomBuildUdaf(5000)
-    val distributed = hashes.toDF("url_hash").repartition(4)
-      .agg(agg(org.apache.spark.sql.functions.col("url_hash")))
-      .collect()(0).getAs[Array[Byte]](0)
+    val (shards, n) = ShardedBloom.buildShardsWithCount(
+      hashes.toDF("url_hash").repartition(4), "url_hash", 5000, numShards = 1)
+    assert(n == 5000 && shards.length == 1)
+    val distributed = shards(0)
     assert(hashes.forall(BloomSeen.mightContain(distributed, _)))
     val local = BloomSeen.empty(5000, 0.01)
     hashes.foreach(BloomSeen.put(local, _))
