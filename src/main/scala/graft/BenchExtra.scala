@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Extra measurement main (guide §1: measure first; §1.4 noop sink) —
@@ -14,6 +16,10 @@ import org.apache.spark.sql.SparkSession
   *   - repeats: timed repeats per query (first is reported separately as
   *     the cold number; Bench itself records cold numbers)
   *   - name...: restrict to these query names (default: all)
+  *
+  * Prints one JSON object keyed by query name: `cold`, `noop` and (with
+  * repeats) `warm_min` seconds, or `"failed":true` and the error message
+  * for a query that threw.
   */
 object BenchExtra {
 
@@ -40,6 +46,14 @@ object BenchExtra {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
+  /** `v` as a JSON string literal. */
+  private def jsonString(v: String): String = "\"" + v.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val planDir = if (args.length > 1) args(1) else "-"
@@ -54,17 +68,22 @@ object BenchExtra {
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       s.sparkContext.setJobDescription(name)
-      // cold run exactly as Bench times it
-      val (_, cold) = timed {
-        try fn(s, sfDir).count() catch { case _: Throwable => -1L }
-      }
-      val warm = (1 until repeats).map { _ =>
-        timed { try fn(s, sfDir).count() catch { case _: Throwable => -1L } }._2
-      }
-      // noop-sink isolation (computes every column, discards output)
-      val (_, noop) = timed {
-        try fn(s, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+      // a query that throws reports its failure, never a time
+      val fields = try {
+        // cold run exactly as Bench times it
+        val (_, cold) = timed(fn(s, sfDir).count())
+        val warm = (1 until repeats).map(_ => timed(fn(s, sfDir).count())._2)
+        // noop-sink isolation (computes every column, discards output)
+        val (_, noop) = timed(
+          fn(s, sfDir).write.format("noop").mode("overwrite").save())
+        println(f"[benchextra] $name%-28s cold=$cold%7.3f noop=$noop%7.3f " +
+          (if (warm.isEmpty) "" else f"warm_min=${warm.min}%7.3f"))
+        val warmStr =
+          if (warm.isEmpty) "" else f""","warm_min":${warm.min}%.3f"""
+        f""""cold":$cold%.3f,"noop":$noop%.3f$warmStr"""
+      } catch { case NonFatal(e) =>
+        println(s"[benchextra] $name FAILED: $e")
+        s""""failed":true,"error":${jsonString(String.valueOf(e.getMessage))}"""
       }
       if (planDir != "-") {
         try {
@@ -72,15 +91,11 @@ object BenchExtra {
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(planDir, s"$name.txt"), plan)
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           println(s"[benchextra] plan dump $name FAILED: ${e.getMessage}")
         }
       }
-      val warmStr =
-        if (warm.isEmpty) "" else f""","warm_min":${warm.min}%.3f"""
-      println(f"[benchextra] $name%-28s cold=$cold%7.3f noop=$noop%7.3f " +
-        (if (warm.isEmpty) "" else f"warm_min=${warm.min}%7.3f"))
-      s"""\"$name\":{"cold":${f"$cold%.3f"},"noop":${f"$noop%.3f"}$warmStr}"""
+      s""""$name":{$fields}"""
     }
     println(results.mkString("{", ",", "}"))
     val total = names.size

@@ -58,28 +58,19 @@ object CrawlLoop {
     var totalFetched = 0L
     var totalErrors = 0L
     var totalDeduped = 0L
-    // derived arithmetically per round: pending' = pending - selected + new
-    var state: CrawlRound.FrontierState =
-      Snapshots.readManifest(warehouse, round - 1) match {
-        case Some(m) => CrawlRound.FrontierState(m.frontierCount, m.headCount,
-          m.backlogPending, m.backlogPhysRows, m.baseRound)
-        // headCount = -1: CrawlRound treats headCount >= 0 as a TRUSTED
-        // upper bound on the selected slice (broadcast gate + Bloom
-        // sizing); with no manifest there is no bound, so force the
-        // serial exact selected count rather than a 0-bound that
-        // would ungate the broadcast on an arbitrarily large head
-        case None => CrawlRound.FrontierState(-1L, -1L, 0L, 0L, -1)
-      }
+    // derived arithmetically per round: pending' = pending - selected + new.
+    // Round - 1 is always committed (snapshot 0 from seedSnapshot, or the
+    // latest round on resume), and its headCount is the trusted upper
+    // bound CrawlRound gates the fetch join on.
+    val start = Snapshots.readManifest(warehouse, round - 1).getOrElse(
+      sys.error(s"warehouse $warehouse: no manifest for round ${round - 1}"))
+    var state = CrawlRound.FrontierState(start.frontierCount, start.headCount,
+      start.backlogPending, start.backlogPhysRows, start.baseRound)
 
     // the cumulative Bloom (shard array) lives in driver memory across
     // rounds (it is merged here anyway); the per-round file write remains
     // the resume source of truth, but steady-state rounds never re-read it
     var bloomShards: Array[Array[Byte]] = null
-
-    // previous round's suspect count — sizes the fused count+Bloom agg in
-    // burst rounds (CrawlRound). Session-local only: a resumed crawl's
-    // first round simply pays the two-job path once.
-    var suspectHint = -1L
 
     while (state.pending != 0L && round <= cfg.maxRounds &&
       !Files.exists(Paths.get(warehouse, CancelMarker))) {
@@ -93,8 +84,7 @@ object CrawlLoop {
       // the round writes fetched/misses/head/backlog deltas/host_state/
       // seen_delta itself; manifest below is the commit marker
       val res = CrawlRound.run(spark, head, pages, seen, bloom, cfg,
-        round, warehouse, state, expectedUrls, robots, suspectHint)
-      suspectHint = res.suspectCount
+        round, warehouse, state, expectedUrls, robots)
 
       // incremental Bloom merge (north_rule "merge deltas at round
       // boundaries"): the round built this delta's Bloom DISTRIBUTED with

@@ -149,64 +149,23 @@ object UrlExpressions {
       copy(child = c)
   }
 
-  /** Bloom-filter probe against a TorrentBroadcast-shipped filter as a
-    * native expression. This sits on the two hottest per-row paths in the
-    * engine — every discovered link (seen pre-filter) and the above-gate
-    * pages scan (selected-slice runtime filter) — where the former Scala
-    * UDF paid per-row boxing and broke WholeStageCodegen. The broadcast
-    * handle rides in the codegen references (shipped once per executor by
-    * TorrentBroadcast, never per task binary); the byte[] is unwrapped
-    * once per task into mutable state, so the per-row cost is exactly the
-    * k probe loads. */
-  case class BloomMightContain(
-      child: Expression,
-      bloomBc: org.apache.spark.broadcast.Broadcast[Array[Byte]])
-      extends UnaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "graft_bloom_might_contain"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Boolean.valueOf(
-        graft.frontier.BloomSeen.mightContain(
-          bloomBc.value, v.asInstanceOf[Long]))
-
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("graftBloomBc", bloomBc,
-        "org.apache.spark.broadcast.Broadcast")
-      val bytes = ctx.addMutableState("byte[]", "graftBloomBytes",
-        v => s"$v = (byte[]) $bcRef.value();")
-      defineCodeGen(ctx, ev, c =>
-        s"graft.frontier.BloomSeen.mightContain($bytes, $c)")
-    }
-
-    override protected def withNewChildInternal(c: Expression): BloomMightContain =
-      copy(child = c)
-  }
-
-  /** Column wrapper for [[BloomMightContain]]. Goes through
-    * `classic.ExpressionUtils.column` directly (not the function registry):
-    * the probe binds to a specific broadcast per call site, and one round
-    * holds two live blooms at once (selected-slice filter + cumulative
-    * seen), so name-based registration would race plan analysis. */
-  def bloomProbe(bloomBc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-                 hashCol: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      BloomMightContain(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(hashCol),
-        bloomBc))
-
-  /** [[BloomMightContain]]'s sharded sibling: probes the url_hash-range
-    * shard array ([[graft.frontier.ShardedBloom]]) — one shard-index
-    * computation + k probe loads per row, inside WholeStageCodegen. */
+  /** Bloom-filter probe against a TorrentBroadcast-shipped url_hash-range
+    * shard array ([[graft.frontier.ShardedBloom]]; one shard is a single
+    * filter) as a native expression. This sits on the two hottest per-row
+    * paths in the engine — every discovered link (seen pre-filter) and the
+    * above-gate pages scan (selected-slice runtime filter) — where a Scala
+    * UDF would pay per-row boxing and break WholeStageCodegen. The
+    * broadcast handle rides in the codegen references (shipped once per
+    * executor by TorrentBroadcast, never per task binary); the shard array
+    * is unwrapped once per task into mutable state, so the per-row cost is
+    * one shard-index computation + the k probe loads. */
   case class ShardedBloomMightContain(
       child: Expression,
       shardsBc: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]])
       extends UnaryExpression {
     override def dataType: DataType = BooleanType
     override def nullIntolerant: Boolean = true
-    override def prettyName: String = "graft_sharded_bloom_might_contain"
+    override def prettyName: String = "graft_bloom_might_contain"
 
     override def nullSafeEval(v: Any): Any =
       java.lang.Boolean.valueOf(
@@ -227,6 +186,11 @@ object UrlExpressions {
       copy(child = c)
   }
 
+  /** Column wrapper for [[ShardedBloomMightContain]]. Goes through
+    * `classic.ExpressionUtils.column` directly (not the function registry):
+    * the probe binds to a specific broadcast per call site, and one round
+    * can hold two live blooms at once (selected-slice filter + cumulative
+    * seen), so name-based registration would race plan analysis. */
   def shardedBloomProbe(
       shardsBc: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]],
       hashCol: Column): Column =

@@ -1,12 +1,14 @@
 package graft.frontier
 
 import graft.core.XxHash64
-import org.apache.spark.sql.Column
 
 /** From-scratch Bloom filter over 64-bit url hashes — the engine's scalable
   * URL-seen pre-filter (north_rule: "broadcast-merged Bloom URL-seen filter
-  * rebuilt incrementally per crawl round"). The distributed build (per-
-  * partition puts, per-shard OR reduce) is [[ShardedBloom.buildShardsWithCount]].
+  * rebuilt incrementally per crawl round"). This is the single-filter
+  * kernel; the engine builds, probes and persists filters only as
+  * [[ShardedBloom]] shard arrays (one shard = one of these filters). The
+  * distributed build (per-partition puts, per-shard OR reduce) is
+  * [[ShardedBloom.buildShardsWithCount]].
   *
   * Exactness contract: the Bloom is an accelerator only. It has no false
   * negatives (tested by property), so `mightContain == false` proves
@@ -95,13 +97,4 @@ object BloomSeen {
     }
     acc
   }
-
-  /** Probe column against a TorrentBroadcast-shipped bloom — a native
-    * codegen'd expression ([[graft.expressions.UrlExpressions.BloomMightContain]]),
-    * not a UDF: this sits on every discovered link and the above-gate pages
-    * scan. The broadcast handle (never the raw bytes) rides in the codegen
-    * references, so the filter ships once per executor, not per task. */
-  def mightContainCol(bloomBc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-                      hashCol: Column): Column =
-    graft.expressions.UrlExpressions.bloomProbe(bloomBc, hashCol)
 }

@@ -27,11 +27,6 @@ object FrontierEntry {
   }
 }
 
-/** One fetch attempt's outcome (the engine's fetch log / error rows — T4). */
-final case class FetchLogEntry(round: Int, url: String, url_hash: Long,
-                               host: String, depth: Int, status: String,
-                               text_match: Boolean)
-
 /** Per-partition lineage metrics carried in every snapshot manifest
   * (north_rule: "per-partition lineage (round, partition_id, fetched,
   * deduped, errors)"). */

@@ -19,14 +19,16 @@ import org.apache.spark.sql.functions._
   *  - round-boundary merge is a per-shard bitwise OR;
   *  - the probe ships as one broadcast of the shard array and reads
   *    exactly one shard's cache lines per row (native codegen'd
-  *    expression, same as the single-filter probe);
+  *    expression — the engine's only Bloom probe);
   *  - on a real cluster each executor holds the full (broadcast) shard
   *    array once; a memory-constrained deployment can instead map shard →
   *    executor affinity by repartitioning probes on the shard key — the
   *    layout supports it because shard id is a pure function of the hash.
   *
-  * S = 1 degenerates to exactly the single-filter engine (same geometry,
-  * same file format), so local runs and existing snapshots are unchanged.
+  * S = 1 degenerates to exactly a single filter (same geometry, same
+  * `bloom.bin` file), so local runs and existing snapshots are unchanged.
+  * The round's one-off filters (the selected slice above the fetch gate,
+  * the burst confirm's suspects) are one-shard arrays of the same kind.
   */
 object ShardedBloom {
 

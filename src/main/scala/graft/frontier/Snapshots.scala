@@ -18,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     fetched/       the round's fetch working set (item tables and the
   *                    fetch log are views over it — see [[Tables]])
   *     misses/        selected urls with no page row
-  *     bloom-000.bin … cumulative Bloom shards as of this round
-  *                    (`bloom-%03d.bin`, one per url_hash range)
+  *     bloom.bin      cumulative Bloom as of this round; with S > 1
+  *                    shards, `bloom-%03d.bin`, one per url_hash range
   *     manifest.json  COMMIT MARKER — written last; a snapshot without a
   *                    manifest is invisible (aborted round ⇒ clean resume)
   * }}}
@@ -119,15 +119,6 @@ object Snapshots {
     } finally stream.close()
   }
 
-  def writeBloom(warehouse: String, round: Int, bloom: Array[Byte]): Unit = {
-    val dir = Paths.get(snapDir(warehouse, round))
-    Files.createDirectories(dir)
-    Files.write(dir.resolve("bloom.bin"), bloom)
-  }
-
-  def readBloom(warehouse: String, round: Int): Array[Byte] =
-    Files.readAllBytes(Paths.get(snapDir(warehouse, round), "bloom.bin"))
-
   /** Sharded seen-filter persistence ([[ShardedBloom]]): S = 1 keeps the
     * single `bloom.bin` (existing snapshots stay readable); S > 1 writes
     * one `bloom-%03d.bin` per url_hash-range shard — at the 10^10 design
@@ -135,15 +126,14 @@ object Snapshots {
     * array anyway, and per-shard files let a sharded reader fetch only
     * the shards it owns. */
   def writeBloomShards(warehouse: String, round: Int,
-                       shards: Array[Array[Byte]]): Unit =
-    if (shards.length == 1) writeBloom(warehouse, round, shards(0))
-    else {
-      val dir = Paths.get(snapDir(warehouse, round))
-      Files.createDirectories(dir)
-      shards.zipWithIndex.foreach { case (b, i) =>
-        Files.write(dir.resolve(f"bloom-$i%03d.bin"), b)
-      }
+                       shards: Array[Array[Byte]]): Unit = {
+    val dir = Paths.get(snapDir(warehouse, round))
+    Files.createDirectories(dir)
+    if (shards.length == 1) Files.write(dir.resolve("bloom.bin"), shards(0))
+    else shards.zipWithIndex.foreach { case (b, i) =>
+      Files.write(dir.resolve(f"bloom-$i%03d.bin"), b)
     }
+  }
 
   def readBloomShards(warehouse: String, round: Int): Array[Array[Byte]] = {
     val dir = Paths.get(snapDir(warehouse, round))

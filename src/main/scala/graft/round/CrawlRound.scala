@@ -4,8 +4,8 @@ import scala.collection.mutable
 import scala.concurrent.Future
 
 import graft.core.Crawl
-import graft.frontier.{BloomSeen, InternalRows, PartitionLineage, ShardedBloom,
-  Snapshots, TieredFrontier}
+import graft.frontier.{InternalRows, PartitionLineage, ShardedBloom, Snapshots,
+  TieredFrontier}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,11 +104,12 @@ object CrawlRound {
     *    into the anti join. Zero shuffles.
     *  - burst (millions of suspects — seed storms, frontier rewinds): a
     *    shuffled join would exchange the whole seen table (the r2 'weak'
-    *    finding). Instead: one O(suspects) agg builds a Bloom over the
-    *    suspect hashes, pushed into the seen scan as the native codegen'd
-    *    probe — seen collapses to (true matches + ~0.1% fp) BEFORE any
-    *    join, and the anti join's build side is O(matches). The suspect
-    *    shuffle is O(delta); seen is scanned, never moved.
+    *    finding). Instead: one O(suspects) job builds a Bloom over the
+    *    suspect hashes, sized by `nSuspects`, pushed into the seen scan as
+    *    the native codegen'd probe — seen collapses to (true matches +
+    *    ~0.1% fp) BEFORE any join, and the anti join's build side is
+    *    O(matches). The suspect shuffle is O(delta); seen is scanned,
+    *    never moved.
     *
     * Exactness: the suspect Bloom has no false negatives, so every true
     * match survives the prefilter; false positives on the seen side have
@@ -131,9 +132,7 @@ object CrawlRound {
 
   def confirmNew(seen: DataFrame, suspects: DataFrame,
                  nSuspects: Long,
-                 prebuiltBloom: Option[Array[Byte]] = None,
                  rows: Option[DataFrame] = None): DataFrame = {
-    val spark = suspects.sparkSession
     val from = rows.getOrElse(suspects)
     if (nSuspects <= SuspectBloomGate) {
       val matchedSeen = seen
@@ -141,28 +140,19 @@ object CrawlRound {
           "left_semi")
       from.join(broadcast(matchedSeen), ConfirmKey, "left_anti")
     } else {
-      // burst rounds usually arrive with the suspect Bloom already
-      // built — fused into the same job as the suspect count, sized
-      // by the previous round's count (see run()); only a missing or
-      // undersized-beyond-guard hint pays this second pass
-      prebuiltBloom.orElse(countAndBloom(suspects, nSuspects, 0.001)._2) match {
-        case None => from // no suspect rows: nothing to confirm
-        case Some(bytes) =>
-          val bc = spark.sparkContext.broadcast(bytes)
-          from.join(seen.filter(BloomSeen.mightContainCol(bc,
-            col("url_hash"))), ConfirmKey, "left_anti")
-      }
+      val bc = suspects.sparkSession.sparkContext.broadcast(
+        bloomOver(suspects, nSuspects, 0.001))
+      from.join(seen.filter(ShardedBloom.mightContainCol(bc, col("url_hash"))),
+        ConfirmKey, "left_anti")
     }
   }
 
-  /** Row count plus a Bloom over `url_hash` (sized for at least
-    * `capacity` items) in ONE job; `None` when `df` is empty. */
-  private def countAndBloom(df: DataFrame, capacity: Long,
-                            fpp: Double): (Long, Option[Array[Byte]]) = {
-    val (shards, n) = ShardedBloom.buildShardsWithCount(df, "url_hash",
-      math.max(capacity, MinBloomItems), numShards = 1, fpp)
-    (n, if (n == 0) None else Some(shards(0)))
-  }
+  /** A one-shard Bloom ([[ShardedBloom]]) over `df`'s `url_hash`, sized
+    * for at least `capacity` items. */
+  private def bloomOver(df: DataFrame, capacity: Long,
+                        fpp: Double): Array[Array[Byte]] =
+    ShardedBloom.buildShardsWithCount(df, "url_hash",
+      math.max(capacity, MinBloomItems), numShards = 1, fpp)._1
 
   /** `df`'s row count, as a job on its internal rows ([[InternalRows]]). */
   private def rowCount(df: DataFrame): Long =
@@ -220,8 +210,7 @@ object CrawlRound {
                                refillCount: Long,
                                state: FrontierState,
                                deltaBloom: Option[Array[Array[Byte]]],
-                               lineage: Seq[PartitionLineage],
-                               suspectCount: Long = 0L) {
+                               lineage: Seq[PartitionLineage]) {
     def frontierCount: Long = state.pending
   }
 
@@ -269,7 +258,7 @@ object CrawlRound {
     * (shuffled-hash at these key counts). */
   def fetchJoin(pages: DataFrame, selected: DataFrame,
                 selectedCount: Long,
-                selectedBloom: Option[Array[Byte]] = None,
+                selectedBloom: Option[Array[Array[Byte]]] = None,
                 withText: Boolean = true): DataFrame =
     if (selectedCount <= BroadcastRowGate)
       pagesB(pages, withText).join(broadcast(selected),
@@ -281,7 +270,7 @@ object CrawlRound {
           graft.expressions.UrlExpressions.register(spark)
           val bc = spark.sparkContext.broadcast(b)
           pagesB(pages, withText).filter(
-            BloomSeen.mightContainCol(bc, expr("graft_url_hash(url)")))
+            ShardedBloom.mightContainCol(bc, expr("graft_url_hash(url)")))
         case None => pagesB(pages, withText)
       }
       scanSide.join(selected, Seq("host_bucket", "url"))
@@ -305,28 +294,27 @@ object CrawlRound {
           warehouse: String,
           state: FrontierState,
           expectedUrls: Long,
-          robots: Map[String, Vector[String]] = Map.empty,
-          suspectHint: Long = -1L): RoundResult =
+          robots: Map[String, Vector[String]] = Map.empty): RoundResult =
     RoundScope(spark.sparkContext, round) { scope =>
       val p = new Phases(spark, cfg, round, warehouse, state, scope)
       val sel = p.select(head, pages)
       val fetch = p.fetchExtract(sel)
       val exp = p.expandConfirm(fetch.fetched, seen, bloom, expectedUrls,
-        robots, suspectHint)
+        robots)
       val merge = p.mergeOverflow(sel.remaining, exp.newEntries)
       val refill = p.refillReconcile(merge)
-      p.sideWrites(sel, fetch, exp, merge, refill)
+      p.sideWrites(fetch, exp, merge, refill)
     }
 
   private val feColsC = TieredFrontier.feCols.map(col)
 
   // values the phases hand to each other
   private final case class Selection(selected: DataFrame, remaining: DataFrame,
-                                     gateCount: Long, pages: DataFrame)
+                                     pages: DataFrame)
   /** `lineage`: (fetch partition, pages, links) per fetch partition. */
   private final case class Fetch(fetched: DataFrame,
                                  lineage: Future[Seq[(Int, Long, Long)]])
-  private final case class Expansion(newEntries: DataFrame, nSuspects: Long,
+  private final case class Expansion(newEntries: DataFrame,
       deltaBloom: Future[(Option[Array[Array[Byte]]], Long)])
   /** `newWorse` and `overflow` are None when known empty; `remainingCount`
     * is the number of head rows the selection left behind. */
@@ -370,46 +358,39 @@ object CrawlRound {
             (capped, beyond.unionByName(within.join(capped.select("url_hash"),
               Seq("url_hash"), "left_anti")))
           }
-        // The broadcast gate needs a row bound BEFORE the fetch join, but the
-        // EXACT selected count is only bookkeeping (error/pending arithmetic,
-        // consumed after the fetch write). The manifest's headCount bounds
-        // selected from above (selection ranks within the head), so the gate
-        // decision — and the selected-slice Bloom's sizing above the gate —
-        // use the bound, and the exact count comes later and for free from
-        // the overflow probe (selected = head − remaining): no serial
-        // head-size barrier in any round (one cost 2-8 s/round of serial
-        // time in above-gate rounds at cluster job latencies).
-        // Conservative in the bound direction only: a round whose
-        // head exceeds the gate but whose selected slice is under it takes
-        // the Bloom-prefiltered join instead of the broadcast — correct, and
-        // the Bloom oversize is capped by HeadFactor. The serial count
-        // survives only when no manifest bound exists (headCount < 0).
-        val gateCount =
-          if (state.headCount >= 0) state.headCount
-          else rowCount(selected) // no-manifest fallback: serial exact count
         // No bucket pruning before the join: a pre-job collecting the
         // selected buckets cost more than the pages scan it saved (crawl_deep,
         // 4 of 4 interleaved pairs), and its IN list made every round's plan
         // new code. The broadcast fetch join reads every bucket.
-        Selection(selected, remaining, gateCount, withHostBucket(pages))
+        Selection(selected, remaining, withHostBucket(pages))
       }
 
     /** pages ⋈ selected (size-gated broadcast), extracted via the shared
-      * pure [[Crawl.process]] and written once as `fetched`. */
+      * pure [[Crawl.process]] and written once as `fetched`.
+      *
+      * The broadcast gate needs a row bound BEFORE the fetch join, but the
+      * EXACT selected count is only bookkeeping (error/pending arithmetic,
+      * consumed after the fetch write). The manifest's headCount bounds
+      * selected from above (selection ranks within the head), so the gate
+      * decision — and the selected-slice Bloom's sizing above the gate —
+      * use the bound, and the exact count comes later and for free from
+      * the overflow probe (selected = head − remaining): no serial
+      * head-size barrier in any round (one cost 2-8 s/round of serial time
+      * in above-gate rounds at cluster job latencies). Conservative in the
+      * bound direction only: a round whose head exceeds the gate but whose
+      * selected slice is under it takes the Bloom-prefiltered join instead
+      * of the broadcast — correct, and the Bloom oversize is capped by
+      * HeadFactor. */
     def fetchExtract(sel: Selection): Fetch = scope.phase("fetch") {
-      // Above-gate rounds need a selected-slice Bloom BEFORE the fetch job,
-      // sized by the manifest bound that is known before the pass starts.
-      // The exact selected count is never a job of its own: it is derived
-      // from the overflow probe's remaining count (see sideWrites).
       graft.expressions.UrlExpressions.register(spark)
       val selectedBloom =
-        if (sel.gateCount > BroadcastRowGate)
-          countAndBloom(sel.selected, sel.gateCount, 0.01)._2
+        if (state.headCount > BroadcastRowGate)
+          Some(bloomOver(sel.selected, state.headCount, 0.01))
         else None
       val hits = fetchJoin(sel.pages,
         sel.selected.select("host_bucket", "url", "url_hash", "host",
           "host_hash", "depth", "priority"),
-        sel.gateCount, selectedBloom, withText = cfg.verifyText)
+        state.headCount, selectedBloom, withText = cfg.verifyText)
 
       val cfgB = spark.sparkContext.broadcast(cfg)
       val processUdf = udf { (url: String, html: Array[Byte]) =>
@@ -458,7 +439,7 @@ object CrawlRound {
         // must not erase a miss row from the fetch log.
         val fetchedHashes = fetched.select("url_hash", "url")
         val side =
-          if (sel.gateCount <= BroadcastRowGate) broadcast(fetchedHashes)
+          if (state.headCount <= BroadcastRowGate) broadcast(fetchedHashes)
           else fetchedHashes
         sel.selected
           .join(side, Seq("url_hash", "url"), "left_anti")
@@ -472,8 +453,8 @@ object CrawlRound {
       * the suspects; writes `seen_delta` and builds the delta Bloom. */
     def expandConfirm(fetched: DataFrame, seen: DataFrame,
                       bloom: Array[Array[Byte]], expectedUrls: Long,
-                      robots: Map[String, Vector[String]],
-                      suspectHint: Long): Expansion = scope.phase("expand") {
+                      robots: Map[String, Vector[String]]
+                     ): Expansion = scope.phase("expand") {
       // native Catalyst expressions (codegen'd, same kernels as the oracle)
       // for the per-link hot path — see graft.expressions.UrlExpressions
       // discovered_round is this round, read from the snapshot dir the
@@ -536,27 +517,15 @@ object CrawlRound {
         ShardedBloom.mightContainCol(bloomBc, col("url_hash"))))
       val suspects = probed.filter(col("maybe_seen")).drop("maybe_seen")
       // The suspect count is the serial barrier that picks the confirm
-      // branch; burst rounds (count > SuspectBloomGate) additionally need
-      // a Bloom over the suspect hashes before the seen scan. When the
-      // PREVIOUS round was a burst (suspectHint, threaded by CrawlLoop —
-      // crawls are strongly round-correlated), build that Bloom inside the
-      // SAME job as the count, sized by the hint — one cache-scan
-      // instead of two serial jobs. An over-capacity Bloom only degrades
-      // fpp (never false negatives), but a degraded prefilter would let
-      // too much of the seen scan into the anti join, so a count past the
-      // sizing discards the fused filter and rebuilds exactly sized (two
-      // jobs, paid only on a badly-wrong hint).
-      val (nSuspects, fusedBloom) =
-        if (suspectHint > SuspectBloomGate) {
-          val cap = math.max(suspectHint * 2, MinBloomItems)
-          val (n, b) = countAndBloom(suspects, cap, 0.001)
-          (n, b.filter(_ => n <= cap))
-        } else (rowCount(suspects), None)
+      // branch; a burst round (count > SuspectBloomGate) then builds its
+      // exactly sized suspect Bloom inside confirmNew (a second scan of
+      // the cached `probed`).
+      val nSuspects = rowCount(suspects)
       // the confirm filters every candidate in one pass: the Bloom-cleared
       // ones are absent from seen, so they pass the anti join untouched
       val confirmed =
         if (nSuspects == 0) probed
-        else confirmNew(seen, suspects, nSuspects, fusedBloom, Some(probed))
+        else confirmNew(seen, suspects, nSuspects, rows = Some(probed))
       // url_hash2 rides along ONLY into seen_delta (the confirm pair key);
       // the frontier schema stays url_hash-only
       val newEntries = scope.persist(
@@ -576,7 +545,7 @@ object CrawlRound {
           .sortWithinPartitions(col("url_hash"))
           .write.mode("overwrite").parquet(path("seen_delta"))
       }
-      Expansion(newEntries, nSuspects, deltaBloom)
+      Expansion(newEntries, deltaBloom)
     }
 
     /** Tiered-frontier maintenance: new entries split against each host's
@@ -809,7 +778,7 @@ object CrawlRound {
 
     /** Backlog deltas + host-state upkeep off the critical path, then the
       * bookkeeping — all counts arithmetic, no count jobs on big tables. */
-    def sideWrites(sel: Selection, fetch: Fetch, exp: Expansion, m: Merge,
+    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge,
                    r: Refill): RoundResult = scope.phase("side-writes") {
       // backlog additions: head overflow + new entries that rank behind the
       // backlog minimum, MINUS any promoted during refill; None when both
@@ -842,11 +811,8 @@ object CrawlRound {
         }
       }
 
-      // selected + remaining = head (exact manifest arithmetic); the
-      // no-manifest fallback counted the selection exactly for the gate
-      val selectedCount =
-        if (state.headCount >= 0) state.headCount - m.remainingCount
-        else sel.gateCount
+      // selected + remaining = head (exact manifest arithmetic)
+      val selectedCount = state.headCount - m.remainingCount
       val lineageRows = scope.await(fetch.lineage)
       val fetchedCount = lineageRows.map(_._2).sum
       val discoveredCount = lineageRows.map(_._3).sum
@@ -878,7 +844,7 @@ object CrawlRound {
       // manifest commit makes this round visible to resume
       RoundResult(selectedCount, fetchedCount, errorCount, discoveredCount,
         newCount, dedupedCount, overflowCount, rmCount, newState,
-        deltaBloom, lineage, suspectCount = exp.nSuspects)
+        deltaBloom, lineage)
     }
   }
 }

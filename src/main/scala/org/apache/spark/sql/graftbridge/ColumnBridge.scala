@@ -8,8 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * converters (`classic.ExpressionUtils`), for the one place the engine
   * must build a `Column` from a custom Catalyst expression bound to a
   * per-call-site object (the broadcast Bloom probe — see
-  * `graft.expressions.UrlExpressions.bloomProbe`). Everything else goes
-  * through the public function-registry route.
+  * `graft.expressions.UrlExpressions.shardedBloomProbe`). Everything else
+  * goes through the public function-registry route.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

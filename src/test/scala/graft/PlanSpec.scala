@@ -33,7 +33,8 @@ class PlanSpec extends AnyFunSuite {
       ("http://tieba1.example.com/p/2000001", 12))
       .toDF("url", "host_bucket")
       .select(col("host_bucket"), col("url"))
-    // same shape CrawlRound.run builds: static IN pruning + broadcast join
+    // the broadcast join CrawlRound.run builds; the static IN filter
+    // checks that host_bucket predicates prune the disk partitions
     val hits = CrawlRound.withHostBucket(pages)
       .filter(col("host_bucket").isin(12, 37))
       .join(broadcast(selected), Seq("host_bucket", "url"))
@@ -125,7 +126,7 @@ class PlanSpec extends AnyFunSuite {
         .collect().foreach(r => graft.frontier.BloomSeen.put(bloom,
           graft.core.UrlCanon.urlHash(r.getString(0))))
       val filteredJoin = CrawlRound.fetchJoin(pages, sel,
-        CrawlRound.BroadcastRowGate + 1, Some(bloom))
+        CrawlRound.BroadcastRowGate + 1, Some(Array(bloom)))
       val overF = planOf(filteredJoin)
       assert(!overF.contains("BroadcastHashJoin"), overF.take(2000))
       assert(overF.contains("Filter"), overF.take(2000))
@@ -175,6 +176,26 @@ class PlanSpec extends AnyFunSuite {
     val exact = suspects.join(seen, CrawlRound.ConfirmKey, "left_anti")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(a == exact)
+
+    // the round's own call shape: `rows` is every probed candidate — the
+    // suspects plus Bloom-cleared novel rows, which are absent from seen —
+    // and the suspects are a filter over it
+    val probedPath = TestSpark.tmpDir("confirm-probed")
+    suspects.withColumn("maybe_seen", lit(true))
+      .unionByName(spark.range(3000).selectExpr("-(id + 1) as url_hash",
+        "xxhash64(-(id + 1)) as url_hash2", "concat('http://n', id) as url",
+        "false as maybe_seen"))
+      .write.mode("overwrite").parquet(probedPath)
+    val probed = spark.read.parquet(probedPath)
+    val probedSuspects = probed.filter(col("maybe_seen")).drop("maybe_seen")
+    val exactRows = probed.join(seen, CrawlRound.ConfirmKey, "left_anti")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(exactRows.size == exact.size + 3000)
+    for (n <- Seq(4000L, CrawlRound.SuspectBloomGate + 1)) {
+      val got = CrawlRound.confirmNew(seen, probedSuspects, n,
+        rows = Some(probed)).collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == exactRows, s"nSuspects=$n")
+    }
   }
 
   test("burst confirm: anti join builds the matched set, never the suspect burst") {
@@ -244,13 +265,13 @@ class PlanSpec extends AnyFunSuite {
     val bloom = graft.frontier.BloomSeen.empty(1000)
     val present = (0L until 200L).map(_ * 13 + 7)
     present.foreach(graft.frontier.BloomSeen.put(bloom, _))
-    val bc = spark.sparkContext.broadcast(bloom)
+    val bc = spark.sparkContext.broadcast(Array(bloom))
     // parquet-backed so the probe isn't constant-folded out of the plan
     val p = TestSpark.tmpDir("plan-bloom")
     (present ++ Seq(-1L, -2L, -3L)).toDF("h")
       .write.mode("overwrite").parquet(p)
     val probed = spark.read.parquet(p).withColumn("hit",
-      graft.frontier.BloomSeen.mightContainCol(bc, col("h")))
+      graft.frontier.ShardedBloom.mightContainCol(bc, col("h")))
     val plan = planOf(probed)
     assert(!plan.contains("UDF"), plan.take(2000))
     assert(plan.contains("graft_bloom_might_contain"), plan.take(2000))
