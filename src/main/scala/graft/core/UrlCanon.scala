@@ -107,15 +107,13 @@ object UrlCanon {
 
   def urlHash(canonicalUrl: String): Long = XxHash64.hashString(canonicalUrl)
 
+  /** `url_hash2`'s xxhash64 seed, shared with the native expression. */
+  val Hash2Seed: Long = 0x9E3779B97F4A7C15L
+
   /** Second independent url hash (seen-confirm pair key — see
     * [[graft.expressions.UrlExpressions.UrlHash64B]]). */
   def urlHash2(canonicalUrl: String): Long =
-    XxHash64.hashString(canonicalUrl, 0x9E3779B97F4A7C15L)
+    XxHash64.hashString(canonicalUrl, Hash2Seed)
 
   def hostHash(host: String): Long = XxHash64.hashString(host)
-
-  /** Host bucket in [0, numBuckets): the co-location key shared by the
-    * frontier and the pages table (floor-mod so negative hashes map in). */
-  def hostBucket(url: String, numBuckets: Int): Int =
-    (((hostHash(host(url)) % numBuckets) + numBuckets) % numBuckets).toInt
 }

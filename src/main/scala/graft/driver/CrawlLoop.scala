@@ -138,7 +138,6 @@ object CrawlLoop {
                            expectedUrls: Long,
                            robots: Map[String, Vector[String]]): Unit = {
     import spark.implicits._
-    graft.expressions.UrlExpressions.register(spark)
     val canonUdf = udf((u: String) => graft.core.UrlCanon.canonicalize(u))
     val slices = math.max(1, math.min(64, seedUrls.size / 50000 + 1))
     // canonical-identity dedupe BEFORE gating (the oracle simulator
@@ -147,18 +146,14 @@ object CrawlLoop {
     val canon = spark.sparkContext.parallelize(seedUrls, slices).toDF("raw_url")
       .select(canonUdf(col("raw_url")).as("url"))
     val gated =
-      if (cfg.obeyRobots && robots.nonEmpty) {
-        graft.expressions.UrlExpressions.registerRobots(spark, robots)
-        canon.filter(expr("graft_robots_allowed(url)"))
-      } else canon
+      if (cfg.obeyRobots && robots.nonEmpty)
+        canon.filter(graft.expressions.UrlExpressions.robotsAllowed(
+          col("url"), robots))
+      else canon
     // dedupe on the 128-bit pair, not url_hash alone: a 64-bit seed
     // collision must not silently drop a distinct seed url
-    val entries = gated
-      .withColumn("url_hash", expr("graft_url_hash(url)"))
-      .withColumn("url_hash2", expr("graft_url_hash2(url)"))
+    val entries = CrawlRound.withUrlKeys(gated)
       .dropDuplicates("url_hash", "url_hash2")
-      .withColumn("host", expr("graft_url_host(url)"))
-      .withColumn("host_hash", expr("graft_url_hash(host)"))
       .withColumn("priority", lit(0))
       .withColumn("depth", lit(0))
       .withColumn("parent_url", lit(""))

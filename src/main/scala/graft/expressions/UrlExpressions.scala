@@ -1,23 +1,28 @@
 package graft.expressions
 
 import graft.core.{UrlCanon, XxHash64}
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.types.{BooleanType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal,
+  UnaryExpression}
+import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the engine's hottest scalar kernels —
-  * the per-link url/host hashing on the frontier-expansion path. A Scala
-  * UDF here pays per-row encoder boxing and breaks WholeStageCodegen; a
-  * native `UnaryExpression` with `doGenCode` emits a direct static call
-  * inside the generated loop (SURVEY.md §2.10 preference order: built-in >
-  * native Expression > UDF).
+  * the per-link url/host hashing on the frontier-expansion path, the
+  * robots gate and the Bloom probe. A Scala UDF here pays per-row encoder
+  * boxing and breaks WholeStageCodegen; a native `UnaryExpression` with
+  * `doGenCode` emits a direct static call inside the generated loop
+  * (SURVEY.md §2.10 preference order: built-in > native Expression > UDF).
   *
-  * All three delegate to the same pure-Scala kernels
+  * The hashes and the host delegate to the same pure-Scala kernels
   * ([[graft.core.XxHash64]], [[graft.core.UrlCanon]]) used by the oracle
-  * simulator, so engine/oracle identity is preserved bit-for-bit.
+  * simulator, so engine/oracle identity is preserved bit-for-bit. Every
+  * expression is reached as a typed `Column` function below (built with
+  * `ColumnBridge`); SQL callers get the stateless ones by name through
+  * [[GraftExtensions]].
   */
 object UrlExpressions {
 
@@ -56,10 +61,8 @@ object UrlExpressions {
     * collisions are known to be constructible. A crawl whose threat model
     * includes attacker-crafted colliding URLs should derive url_hash2
     * from a structurally different hash (e.g. SipHash with a secret key)
-    * — a one-line swap here; the non-adversarial assumption is the
-    * documented default. */
-  val Hash2Seed: Long = 0x9E3779B97F4A7C15L
-
+    * — a one-line swap in [[UrlCanon.urlHash2]]; the non-adversarial
+    * assumption is the documented default. */
   case class UrlHash64B(child: Expression) extends UnaryExpression {
     override def dataType: DataType = LongType
     override def nullIntolerant: Boolean = true
@@ -67,12 +70,12 @@ object UrlExpressions {
 
     override def nullSafeEval(v: Any): Any =
       java.lang.Long.valueOf(
-        XxHash64.hash(v.asInstanceOf[UTF8String].getBytes, Hash2Seed))
+        XxHash64.hash(v.asInstanceOf[UTF8String].getBytes, UrlCanon.Hash2Seed))
 
     override protected def doGenCode(ctx: CodegenContext,
                                      ev: ExprCode): ExprCode =
       defineCodeGen(ctx, ev, c =>
-        s"graft.core.XxHash64.hash($c.getBytes(), ${Hash2Seed}L)")
+        s"graft.core.XxHash64.hash($c.getBytes(), ${UrlCanon.Hash2Seed}L)")
 
     override protected def withNewChildInternal(c: Expression): UrlHash64B =
       copy(child = c)
@@ -94,28 +97,6 @@ object UrlExpressions {
           s"graft.core.UrlCanon.host($c.toString()))")
 
     override protected def withNewChildInternal(c: Expression): UrlHost =
-      copy(child = c)
-  }
-
-  /** Host bucket of a URL (0..numBuckets-1): the frontier/pages co-location
-    * key. Folds the former hostBucketUdf into the native-expression family
-    * so the pages-side bucket derivation stays inside WholeStageCodegen. */
-  case class UrlHostBucket(child: Expression, numBuckets: Int)
-      extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullIntolerant: Boolean = true
-    override def prettyName: String = "graft_host_bucket"
-
-    override def nullSafeEval(v: Any): Any =
-      java.lang.Integer.valueOf(
-        UrlCanon.hostBucket(v.asInstanceOf[UTF8String].toString, numBuckets))
-
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.core.UrlCanon.hostBucket($c.toString(), $numBuckets)")
-
-    override protected def withNewChildInternal(c: Expression): UrlHostBucket =
       copy(child = c)
   }
 
@@ -186,65 +167,38 @@ object UrlExpressions {
       copy(child = c)
   }
 
-  /** Column wrapper for [[ShardedBloomMightContain]]. Goes through
-    * `classic.ExpressionUtils.column` directly (not the function registry):
-    * the probe binds to a specific broadcast per call site, and one round
-    * can hold two live blooms at once (selected-slice filter + cumulative
-    * seen), so name-based registration would race plan analysis. */
+  /** `url_hash` of a url column. */
+  def urlHash(c: Column): Column = column(UrlHash64(expression(c)))
+  /** `url_hash2` of a url column. */
+  def urlHash2(c: Column): Column = column(UrlHash64B(expression(c)))
+  /** Lower-cased host of a url column. */
+  def urlHost(c: Column): Column = column(UrlHost(expression(c)))
+  /** robots gate of a url column, bound to this call's rule map. */
+  def robotsAllowed(c: Column, byHost: Map[String, Vector[String]]): Column =
+    column(RobotsAllowed(expression(c), byHost))
+  /** Bloom probe of a `url_hash` column, bound to this call's broadcast
+    * shard array: one round can hold two live blooms at once
+    * (selected-slice filter + cumulative seen). */
   def shardedBloomProbe(
       shardsBc: org.apache.spark.broadcast.Broadcast[Array[Array[Byte]]],
       hashCol: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      ShardedBloomMightContain(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(hashCol),
-        shardsBc))
+    column(ShardedBloomMightContain(expression(hashCol), shardsBc))
 
-  // Column-API wrappers (Spark 4: Column.apply over an expression goes
-  // through the internal API; expr-string via session registry is the
-  // public route, so we register and call by name)
-  def urlHash(c: Column): Column =
-    org.apache.spark.sql.functions.expr(s"graft_url_hash(${c.toString})")
-
-  /** Register into a session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_url_hash",
-      exprs => UrlHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_url_hash2",
-      exprs => UrlHash64B(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("graft_url_host",
-      exprs => UrlHost(exprs.head), "scala_udf")
-  }
-
-  /** Register the host-bucket function for a given bucket count. */
-  def registerHostBucket(spark: SparkSession, numBuckets: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_host_bucket", exprs => UrlHostBucket(exprs.head, numBuckets),
-      "scala_udf")
-
-  /** Register the robots gate bound to this run's rule map. */
-  def registerRobots(spark: SparkSession,
-                     byHost: Map[String, Vector[String]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_robots_allowed", exprs => RobotsAllowed(exprs.head, byHost),
-      "scala_udf")
+  /** The stateless functions SQL can call by name ([[GraftExtensions]]). */
+  private[expressions] val SqlFunctions: Seq[Expression => Expression] =
+    Seq(UrlHash64, UrlHash64B, UrlHost)
 }
 
-/** Session extension: injects the engine's native functions at session
-  * build time (`.withExtensions(new GraftExtensions)`) so plain SQL can
-  * call them — the SparkSessionExtensions integration point for the
-  * engine's custom-expression surface. */
+/** Session extension: injects [[UrlExpressions.SqlFunctions]] at session
+  * build time (`.withExtensions(new GraftExtensions)`), each under its
+  * expression's `prettyName` — the one route for calling a native
+  * function by SQL name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_url_hash"),
-      new ExpressionInfo(classOf[UrlExpressions.UrlHash64].getName,
-        "graft_url_hash"),
-      (exprs: Seq[Expression]) => UrlExpressions.UrlHash64(exprs.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_url_host"),
-      new ExpressionInfo(classOf[UrlExpressions.UrlHost].getName,
-        "graft_url_host"),
-      (exprs: Seq[Expression]) => UrlExpressions.UrlHost(exprs.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    UrlExpressions.SqlFunctions.foreach { build =>
+      val e = build(Literal(null, StringType))
+      ext.injectFunction((new FunctionIdentifier(e.prettyName),
+        new ExpressionInfo(e.getClass.getName, e.prettyName),
+        (exprs: Seq[Expression]) => build(exprs.head)))
+    }
 }

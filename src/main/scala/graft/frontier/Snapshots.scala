@@ -2,6 +2,11 @@ package graft.frontier
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{DeserializationFeature,
+  PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Iceberg-style snapshot layout over Parquet (SURVEY.md §7.0: no Iceberg
@@ -24,25 +29,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                    manifest is invisible (aborted round ⇒ clean resume)
   * }}}
   *
-  * The directories are exactly [[PhysicalTables]], all Parquet.
+  * Every directory is a Parquet table. `fetched` is the round's working
+  * set (url, lineage columns, extracted `out` struct, text_match); the
+  * item tables are views over it at read time — one write per round
+  * instead of five. `fetched` and `misses` store no round column:
+  * [[readTable]] derives it from the snap dir ([[roundOfFile]]).
   *
   * Item tables and the seen set are stored as per-round DELTAS: the full
   * table at round k = union of deltas 0..k. At the 10^10-URL design point
   * this keeps each commit O(round output), never O(total crawl state).
   */
 object Snapshots {
-
-  /** Physical per-round tables. `fetched` is the round's working set (url,
-    * lineage columns, extracted `out` struct, text_match); item tables are
-    * derived VIEWS over it at read time — one write per round instead of
-    * five, O(1) jobs per round. `fetched` and `misses` store no round
-    * column: [[readTable]] derives it from the snap dir ([[roundOfFile]]).
-    * The frontier is TIERED (TieredFrontier):
-    * `head`/`host_state` are small full-state tables, `backlog_add`/
-    * `backlog_rm`/`backlog_base` are delta segments. */
-  val PhysicalTables: Seq[String] =
-    Seq("head", "backlog_add", "backlog_rm", "backlog_base", "host_state",
-      "seen_delta", "fetched", "misses")
 
   /** Logical tables exposed to readers (`frontier` = head ∪ pending
     * backlog). */
@@ -56,15 +53,19 @@ object Snapshots {
   final case class Manifest(round: Int, parent: Int, frontierCount: Long,
                             seenDeltaCount: Long, fetched: Long, errors: Long,
                             deduped: Long, lineage: Seq[PartitionLineage],
-                            headCount: Long = 0L, backlogPending: Long = 0L,
-                            backlogPhysRows: Long = 0L, baseRound: Int = -1)
+                            headCount: Long, backlogPending: Long,
+                            backlogPhysRows: Long, baseRound: Int)
+
+  /** Manifest JSON: snake_case keys; a manifest missing a key fails to
+    * read. */
+  private val manifestJson = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .build()
 
   def writeManifest(warehouse: String, m: Manifest): Unit = {
-    val lineageJson = m.lineage.map(l =>
-      s"""{"round":${l.round},"partition_id":${l.partition_id},"fetched":${l.fetched},"deduped":${l.deduped},"errors":${l.errors}}""")
-      .mkString("[", ",", "]")
-    val json =
-      s"""{"round":${m.round},"parent":${m.parent},"frontier_count":${m.frontierCount},"seen_delta_count":${m.seenDeltaCount},"fetched":${m.fetched},"errors":${m.errors},"deduped":${m.deduped},"head_count":${m.headCount},"backlog_pending":${m.backlogPending},"backlog_phys_rows":${m.backlogPhysRows},"base_round":${m.baseRound},"lineage":$lineageJson}"""
+    val json = manifestJson.writeValueAsString(m)
     val dir = Paths.get(snapDir(warehouse, m.round))
     Files.createDirectories(dir)
     val tmp = dir.resolve("manifest.json.tmp")
@@ -74,31 +75,10 @@ object Snapshots {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def extractLong(json: String, key: String): Long = {
-    val re = ("\"" + key + "\":(-?\\d+)").r
-    re.findFirstMatchIn(json).map(_.group(1).toLong)
-      .getOrElse(sys.error(s"manifest missing $key"))
-  }
-
   def readManifest(warehouse: String, round: Int): Option[Manifest] = {
     val p = Paths.get(snapDir(warehouse, round), "manifest.json")
     if (!Files.exists(p)) None
-    else {
-      val json = Files.readString(p)
-      val lineageRe =
-        """\{"round":(\d+),"partition_id":(-?\d+),"fetched":(\d+),"deduped":(\d+),"errors":(\d+)\}""".r
-      val lineage = lineageRe.findAllMatchIn(json.dropWhile(_ != '[')).map(m =>
-        PartitionLineage(m.group(1).toInt, m.group(2).toInt, m.group(3).toLong,
-          m.group(4).toLong, m.group(5).toLong)).toSeq
-      Some(Manifest(extractLong(json, "round").toInt,
-        extractLong(json, "parent").toInt,
-        extractLong(json, "frontier_count"),
-        extractLong(json, "seen_delta_count"), extractLong(json, "fetched"),
-        extractLong(json, "errors"), extractLong(json, "deduped"), lineage,
-        extractLong(json, "head_count"), extractLong(json, "backlog_pending"),
-        extractLong(json, "backlog_phys_rows"),
-        extractLong(json, "base_round").toInt))
-    }
+    else Some(manifestJson.readValue(Files.readString(p), classOf[Manifest]))
   }
 
   private val SnapDirPattern = "snap-(\\d+)".r
@@ -172,7 +152,7 @@ object Snapshots {
     * the per-read footer-inference job (serial driver time in the round
     * loop). `fetched` stays inferred — its nested `out` struct follows
     * the extractor's item types. */
-  private val StaticSchemas: Map[String, org.apache.spark.sql.types.StructType] =
+  private[frontier] val StaticSchemas: Map[String, org.apache.spark.sql.types.StructType] =
     Map(
       "head" -> TieredFrontier.feSchema,
       "backlog_add" -> TieredFrontier.backlogSchema,

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Tiered frontier storage — the O(delta)-per-round layout (Mercator's
@@ -55,9 +55,6 @@ object TieredFrontier {
   def CompactMinRows: Long = sys.props.get("graft.frontier.compactMinRows")
     .map(_.toLong).getOrElse(DefaultCompactMinRows)
 
-  val feCols: Seq[String] = Seq("url", "url_hash", "host", "host_hash",
-    "priority", "depth", "parent_url", "discovered_round", "warc_ts")
-
   /** Static schemas for every per-round read: schema inference costs one
     * small Spark job per `spark.read.parquet` (a footer read), and the
     * round loop does several reads per round — at cluster job-launch
@@ -66,23 +63,20 @@ object TieredFrontier {
       "url STRING, url_hash BIGINT, host STRING, host_hash BIGINT, " +
         "priority INT, depth INT, parent_url STRING, " +
         "discovered_round INT, warc_ts TIMESTAMP")
+  val feCols: Seq[String] = feSchema.fieldNames.toSeq
   /** Backlog segments are directory-partitioned by host_bucket. */
-  val backlogSchema: StructType = StructType.fromDDL(
-      "url STRING, url_hash BIGINT, host STRING, host_hash BIGINT, " +
-        "priority INT, depth INT, parent_url STRING, " +
-        "discovered_round INT, warc_ts TIMESTAMP, host_bucket INT")
+  val backlogSchema: StructType = feSchema.add("host_bucket", IntegerType)
 
   /** The politeness order (priority, warc_ts, url_hash): selection,
     * overflow, refill and the head/backlog invariant all rank by it. */
-  val orderCols: Seq[Column] =
-    Seq(col("priority"), col("warc_ts"), col("url_hash"))
+  private val orderNames = Seq("priority", "warc_ts", "url_hash")
+  val orderCols: Seq[Column] = orderNames.map(col)
   /** Per-host rank in the politeness order. */
   val hostWindow: WindowSpec =
     Window.partitionBy(col("host_hash")).orderBy(orderCols: _*)
   /** The order as one comparable struct — host_state's `bmin`. */
   def keyCol: Column = struct(orderCols: _*)
-  val keyType: StructType =
-    StructType.fromDDL("priority INT, warc_ts TIMESTAMP, url_hash BIGINT")
+  val keyType: StructType = StructType(orderNames.map(feSchema(_)))
   val hostStateSchema: StructType = new StructType()
     .add("host_hash", LongType).add("backlog_count", LongType)
     .add("bmin", keyType)
@@ -177,8 +171,7 @@ object TieredFrontier {
     val pending =
       if (rmPaths.isEmpty) segs
       else segs.join(
-        spark.read
-          .schema("url_hash BIGINT, host_hash BIGINT")
+        spark.read.schema(Snapshots.StaticSchemas("backlog_rm"))
           .parquet(rmPaths: _*).select("url_hash"),
         Seq("url_hash"), "left_anti")
     Some(pending)

@@ -4,6 +4,8 @@ import scala.collection.mutable
 import scala.concurrent.Future
 
 import graft.core.Crawl
+import graft.expressions.UrlExpressions.{robotsAllowed, urlHash, urlHash2,
+  urlHost}
 import graft.frontier.{InternalRows, PartitionLineage, ShardedBloom, Snapshots,
   TieredFrontier}
 import org.apache.spark.rdd.RDD
@@ -224,15 +226,22 @@ object CrawlRound {
 
   /** pages with a host_bucket column: pass-through when the corpus writer
     * already partitioned by it; derived otherwise (input_hint tables have
-    * exactly the 5 contract columns) via the native codegen'd expression —
+    * exactly the 5 contract columns) from the native codegen'd host hash —
     * no UDF on the pages scan. */
   def withHostBucket(pages: DataFrame): DataFrame =
     if (pages.columns.contains("host_bucket")) pages
-    else {
-      graft.expressions.UrlExpressions.registerHostBucket(
-        pages.sparkSession, NumHostBuckets)
-      pages.withColumn("host_bucket", expr("graft_host_bucket(url)"))
-    }
+    else pages.withColumn("host_bucket",
+      hostBucketCol(urlHash(urlHost(col("url")))))
+
+  /** `df` with the frontier keys derived from its `url` column: `url_hash`,
+    * `url_hash2`, `host` and `host_hash` — the one definition for seeds
+    * and discovered links alike (native codegen'd expressions, the same
+    * kernels as the oracle). */
+  def withUrlKeys(df: DataFrame): DataFrame = df
+    .withColumn("url_hash", urlHash(col("url")))
+    .withColumn("url_hash2", urlHash2(col("url")))
+    .withColumn("host", urlHost(col("url")))
+    .withColumn("host_hash", urlHash(col("host")))
 
   /** pages columns renamed for the fetch join. The corpus's pre-extracted
     * `text` column rides along ONLY when the caller verifies extraction
@@ -266,11 +275,9 @@ object CrawlRound {
     else {
       val scanSide = selectedBloom match {
         case Some(b) =>
-          val spark = pages.sparkSession
-          graft.expressions.UrlExpressions.register(spark)
-          val bc = spark.sparkContext.broadcast(b)
+          val bc = pages.sparkSession.sparkContext.broadcast(b)
           pagesB(pages, withText).filter(
-            ShardedBloom.mightContainCol(bc, expr("graft_url_hash(url)")))
+            ShardedBloom.mightContainCol(bc, urlHash(col("url"))))
         case None => pagesB(pages, withText)
       }
       scanSide.join(selected, Seq("host_bucket", "url"))
@@ -382,7 +389,6 @@ object CrawlRound {
       * of the broadcast — correct, and the Bloom oversize is capped by
       * HeadFactor. */
     def fetchExtract(sel: Selection): Fetch = scope.phase("fetch") {
-      graft.expressions.UrlExpressions.register(spark)
       val selectedBloom =
         if (state.headCount > BroadcastRowGate)
           Some(bloomOver(sel.selected, state.headCount, 0.01))
@@ -455,8 +461,6 @@ object CrawlRound {
                       bloom: Array[Array[Byte]], expectedUrls: Long,
                       robots: Map[String, Vector[String]]
                      ): Expansion = scope.phase("expand") {
-      // native Catalyst expressions (codegen'd, same kernels as the oracle)
-      // for the per-link hot path — see graft.expressions.UrlExpressions
       // discovered_round is this round, read from the snapshot dir the
       // fetched rows live in: a lit(round) would make every round's plan
       // new code to compile
@@ -474,25 +478,20 @@ object CrawlRound {
       // Native codegen'd expression, not a UDF — this sits on the per-link
       // hot path when enabled.
       val gatedLinks =
-        if (cfg.obeyRobots && robots.nonEmpty) {
-          graft.expressions.UrlExpressions.registerRobots(spark, robots)
-          rawLinks.filter(expr("graft_robots_allowed(url)"))
-        } else rawLinks
+        if (cfg.obeyRobots && robots.nonEmpty)
+          rawLinks.filter(robotsAllowed(col("url"), robots))
+        else rawLinks
 
       // in-round dedup: one deterministic representative per url (min
       // struct; discovered_round is the same on every row)
-      val candidates = gatedLinks
+      val candidates = withUrlKeys(gatedLinks
         .groupBy(col("url"))
         .agg(min(struct(col("priority"), col("warc_ts"), col("depth"),
           col("parent_url"), col("discovered_round"))).as("m"))
         .select(col("url"), col("m.priority").as("priority"),
           col("m.warc_ts").as("warc_ts"), col("m.depth").as("depth"),
           col("m.parent_url").as("parent_url"),
-          col("m.discovered_round").as("discovered_round"))
-        .withColumn("url_hash", expr("graft_url_hash(url)"))
-        .withColumn("url_hash2", expr("graft_url_hash2(url)"))
-        .withColumn("host", expr("graft_url_host(url)"))
-        .withColumn("host_hash", expr("graft_url_hash(host)"))
+          col("m.discovered_round").as("discovered_round")))
 
       // Bloom pre-filter (broadcast probe); suspects confirmed WITHOUT
       // shuffling the seen table in ANY regime (see confirmNew).

@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into Spark's `private[sql]` Column ↔ Expression
-  * converters (`classic.ExpressionUtils`), for the one place the engine
-  * must build a `Column` from a custom Catalyst expression bound to a
-  * per-call-site object (the broadcast Bloom probe — see
-  * `graft.expressions.UrlExpressions.shardedBloomProbe`). Everything else
-  * goes through the public function-registry route.
+  * converters (`classic.ExpressionUtils`): the one route by which the
+  * engine builds a `Column` from its native Catalyst expressions (the
+  * typed functions of `graft.expressions.UrlExpressions`), including
+  * those bound to a per-call-site object (a broadcast Bloom, a robots
+  * rule map).
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -5,6 +5,7 @@ import java.time.YearMonth
 import graft.core.Crawl
 import graft.corpus.{CorpusWriter, SyntheticWeb, WebSpec}
 import graft.driver.CrawlLoop
+import graft.expressions.UrlExpressions
 import graft.frontier.Snapshots
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
@@ -66,7 +67,7 @@ class CodegenReuseSpec extends AnyFunSuite {
     // discovered in round k was already seen before it
     val links = Snapshots.readLatestTable(spark, wh, "fetched").get
       .select(col("round"), explode(col("out.links.url")).as("url"))
-      .select(col("round"), expr("graft_url_hash(url)").as("url_hash"))
+      .select(col("round"), UrlExpressions.urlHash(col("url")).as("url_hash"))
     val confirming = (2 to first.rounds).count { k =>
       val seenBefore = Snapshots.readTable(spark, wh, "seen_delta", k - 1).get
       !links.filter(col("round") === k).join(seenBefore, Seq("url_hash"),

@@ -1,8 +1,10 @@
 package graft
 
 import graft.core.{UrlCanon, XxHash64}
-import graft.expressions.{GraftExtensions, UrlExpressions}
+import graft.expressions.GraftExtensions
+import graft.expressions.UrlExpressions.{urlHash, urlHash2, urlHost}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExpressionSpec extends AnyFunSuite {
@@ -10,15 +12,15 @@ class ExpressionSpec extends AnyFunSuite {
   test("native expressions == pure kernels, stay in WholeStageCodegen") {
     val spark = TestSpark.spark
     import spark.implicits._
-    UrlExpressions.register(spark)
     val urls = Seq(
       "http://tieba0.example.com/p/1000001",
       "http://tieba9.example.com/f?ie=utf-8&kw=forum3&pn=50",
       "https://a.com/home/main?un=user7")
     val df = urls.toDF("url")
-      .selectExpr("url", "graft_url_hash(url) AS h", "graft_url_host(url) AS host",
-        "graft_url_hash(graft_url_host(url)) AS hh",
-        "graft_url_hash2(url) AS h2")
+      .select(col("url"), urlHash(col("url")).as("h"),
+        urlHost(col("url")).as("host"),
+        urlHash(urlHost(col("url"))).as("hh"),
+        urlHash2(col("url")).as("h2"))
     val rows = df.collect()
     rows.foreach { r =>
       val u = r.getString(0)
@@ -35,7 +37,7 @@ class ExpressionSpec extends AnyFunSuite {
     // must be a WholeStageCodegen project with no ScalaUDF
     val onScan = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-      .selectExpr("graft_url_hash(text) AS h", "graft_url_host(source) AS s")
+      .select(urlHash(col("text")).as("h"), urlHost(col("source")).as("s"))
     val plan = onScan.queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF"), plan.take(800))
     // '*(n)' is the WholeStageCodegen marker in the abbreviated plan string
@@ -43,7 +45,7 @@ class ExpressionSpec extends AnyFunSuite {
     assert(onScan.count() > 0)
     // null propagation (nullIntolerant)
     val n = Seq[Option[String]](None).toDF("url")
-      .selectExpr("graft_url_hash(url) AS h").collect()(0)
+      .select(urlHash(col("url")).as("h")).collect()(0)
     assert(n.isNullAt(0))
   }
 
@@ -54,11 +56,14 @@ class ExpressionSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
-      .getOrCreate()
+      .create() // a fresh session: getOrCreate would hand back the shared one
     try {
-      val h = s2.sql(
-        "SELECT graft_url_hash('http://a.com/x') AS h").collect()(0).getLong(0)
-      assert(h == XxHash64.hashString("http://a.com/x"))
+      val u = "http://a.com/x"
+      val r = s2.sql(s"SELECT graft_url_hash('$u'), graft_url_hash2('$u'), " +
+        s"graft_url_host('$u')").collect()(0)
+      assert(r.getLong(0) == XxHash64.hashString(u))
+      assert(r.getLong(1) == UrlCanon.urlHash2(u))
+      assert(r.getString(2) == "a.com")
     } finally {
       // restore the shared test session as active
       SparkSession.setActiveSession(TestSpark.spark)

@@ -120,7 +120,6 @@ class PlanSpec extends AnyFunSuite {
       // filter must land on the pages scan side (below the join), so the
       // shuffle moves O(selected) pages, never the corpus — and the join
       // output is unchanged vs the unfiltered fallback (no false negatives)
-      graft.expressions.UrlExpressions.register(spark)
       val bloom = graft.frontier.BloomSeen.empty(1000)
       spark.range(100).selectExpr("concat('http://h', id, '.x/p') as url")
         .collect().foreach(r => graft.frontier.BloomSeen.put(bloom,
@@ -286,24 +285,36 @@ class PlanSpec extends AnyFunSuite {
   test("robots gate and host-bucket derivation run as native expressions, no UDF") {
     import spark.implicits._
     val rules = Map("tieba0.example.com" -> Vector("/p/comment"))
-    graft.expressions.UrlExpressions.registerRobots(spark, rules)
-    graft.expressions.UrlExpressions.registerHostBucket(spark, 64)
     // parquet-backed so the gate isn't constant-folded out of the plan
     val linksPath = TestSpark.tmpDir("plan-links")
     Seq("http://tieba0.example.com/p/comment?tid=1",
       "http://tieba0.example.com/p/9").toDF("url")
       .write.mode("overwrite").parquet(linksPath)
-    val gated = spark.read.parquet(linksPath)
-      .filter(org.apache.spark.sql.functions.expr("graft_robots_allowed(url)"))
-      .withColumn("host_bucket",
-        org.apache.spark.sql.functions.expr("graft_host_bucket(url)"))
+    val gated = CrawlRound.withHostBucket(spark.read.parquet(linksPath)
+      .filter(graft.expressions.UrlExpressions.robotsAllowed(col("url"), rules)))
     val plan = planOf(gated)
     assert(!plan.contains("UDF"), plan.take(2000))
     assert(plan.contains("graft_robots_allowed"), plan.take(2000))
-    assert(plan.contains("graft_host_bucket"), plan.take(2000))
+    assert(plan.contains("graft_url_host"), plan.take(2000))
     // codegen path evaluates correctly (reference-object map in the
     // generated code)
     assert(gated.collect().map(_.getString(0)).toSeq ==
       Seq("http://tieba0.example.com/p/9"))
+
+    // every derived bucket is CorpusWriter's hostBucketOf(hostHash(host)),
+    // also for a host whose hash is negative (the floor-mod)
+    import graft.core.UrlCanon
+    val negUrl = Iterator.from(0).map(i => s"http://h$i.example.com/p")
+      .find(u => UrlCanon.hostHash(UrlCanon.host(u)) < 0).get
+    val bucketsPath = TestSpark.tmpDir("plan-buckets")
+    Seq("http://tieba0.example.com/p/9", "http://tieba1.example.com/p/1",
+      negUrl).toDF("url").write.mode("overwrite").parquet(bucketsPath)
+    val buckets = CrawlRound.withHostBucket(spark.read.parquet(bucketsPath))
+      .collect().map(r => r.getString(0) -> r.getInt(1))
+    assert(buckets.map(_._1).toSet ==
+      Set("http://tieba0.example.com/p/9", "http://tieba1.example.com/p/1", negUrl))
+    buckets.foreach { case (u, b) =>
+      assert(b == CrawlRound.hostBucketOf(UrlCanon.hostHash(UrlCanon.host(u))), u)
+    }
   }
 }
