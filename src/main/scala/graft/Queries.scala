@@ -959,8 +959,6 @@ object Queries {
       GoldenValues.weibo))
   )
 
-  private val rowsOnly: Map[String, (SparkSession, String) => DataFrame] = Map.empty
-
   /** State-store/shuffle partition count for the two streaming queries —
     * scoped to the streaming execution only (set before `start`, restored
     * after `stop`; both queries fully execute inside the query function,
@@ -1163,7 +1161,7 @@ object Queries {
 
   def all: Map[String, (SparkSession, String) => DataFrame] =
     (oracleBacked ++ nearDupOracleBacked ++ goldenBacked ++ streaming)
-      .map { case (k, (f, _)) => k -> f } ++ rowsOnly
+      .map { case (k, (f, _)) => k -> f }
 
   def oracle: Map[String, String] =
     (oracleBacked ++ nearDupOracleBacked ++ goldenBacked ++ streaming)

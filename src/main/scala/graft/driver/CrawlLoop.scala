@@ -8,7 +8,6 @@ import graft.frontier.{ShardedBloom, Snapshots, TieredFrontier}
 import graft.round.CrawlRound
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** The driver-side fixpoint loop replacing the reference's Twisted reactor
   * (SURVEY.md §3.1 step 4): bounded iterative BFS = batch rounds with a
@@ -47,12 +46,18 @@ object CrawlLoop {
           robots: Map[String, Vector[String]] = Map.empty): CrawlSummary = {
     import spark.implicits._
 
+    // the cumulative Bloom (shard array) lives in driver memory across
+    // rounds (it is merged here anyway); the per-round file write remains
+    // the resume source of truth, but only a resumed run's first round
+    // reads it
+    var bloomShards: Array[Array[Byte]] = null
     var round = Snapshots.latestCommittedRound(warehouse) match {
       case Some(r) if resume => r + 1
       case Some(_) =>
         sys.error(s"warehouse $warehouse already has snapshots; pass resume=true")
       case None =>
-        seedSnapshot(spark, seedUrls, cfg, warehouse, expectedUrls, robots)
+        bloomShards =
+          seedSnapshot(spark, seedUrls, cfg, warehouse, expectedUrls, robots)
         1
     }
     var totalFetched = 0L
@@ -66,11 +71,6 @@ object CrawlLoop {
       sys.error(s"warehouse $warehouse: no manifest for round ${round - 1}"))
     var state = CrawlRound.FrontierState(start.frontierCount, start.headCount,
       start.backlogPending, start.backlogPhysRows, start.baseRound)
-
-    // the cumulative Bloom (shard array) lives in driver memory across
-    // rounds (it is merged here anyway); the per-round file write remains
-    // the resume source of truth, but steady-state rounds never re-read it
-    var bloomShards: Array[Array[Byte]] = null
 
     while (state.pending != 0L && round <= cfg.maxRounds &&
       !Files.exists(Paths.get(warehouse, CancelMarker))) {
@@ -127,62 +127,34 @@ object CrawlLoop {
       seenCount, pendingAfter = math.max(state.pending, 0L))
   }
 
-  /** Snapshot 0: seeds only (mirrors start_urls, PostSpider.py:40), split
-    * into head and backlog by [[TieredFrontier.writeTiers]]. DISTRIBUTED:
-    * seed lists can be millions of urls (the bench's frontier harness
-    * seeds 3M); canonicalize/dedupe/rank/split as Dataset ops over a
-    * parallelized seed RDD — never driver-side scala sorting or one giant
-    * LocalRelation in the plan. */
+  /** Snapshot 0: seeds only (mirrors start_urls, PostSpider.py:40).
+    * DISTRIBUTED: seed lists can be millions of urls (the bench's frontier
+    * harness seeds 3M), so they are canonicalized over a parallelized seed
+    * RDD — never driver-side sorting or one giant LocalRelation in the
+    * plan — and then enter the frontier the way discovered links do
+    * ([[CrawlRound.seed]]: robots gate, dedupe on the canonical url, as the
+    * oracle simulator's `seen.add` does, and the head/backlog split).
+    * Returns snapshot 0's cumulative Bloom. */
   private def seedSnapshot(spark: SparkSession, seedUrls: Seq[String],
                            cfg: Crawl.CrawlConfig, warehouse: String,
                            expectedUrls: Long,
-                           robots: Map[String, Vector[String]]): Unit = {
+                           robots: Map[String, Vector[String]]
+                          ): Array[Array[Byte]] = {
     import spark.implicits._
     val canonUdf = udf((u: String) => graft.core.UrlCanon.canonicalize(u))
     val slices = math.max(1, math.min(64, seedUrls.size / 50000 + 1))
-    // canonical-identity dedupe BEFORE gating (the oracle simulator
-    // dedupes seeds via seen.add — duplicate or alias-canonical seeds
-    // must not double-enqueue)
-    val canon = spark.sparkContext.parallelize(seedUrls, slices).toDF("raw_url")
-      .select(canonUdf(col("raw_url")).as("url"))
-    val gated =
-      if (cfg.obeyRobots && robots.nonEmpty)
-        canon.filter(graft.expressions.UrlExpressions.robotsAllowed(
-          col("url"), robots))
-      else canon
-    // dedupe on the 128-bit pair, not url_hash alone: a 64-bit seed
-    // collision must not silently drop a distinct seed url
-    val entries = CrawlRound.withUrlKeys(gated)
-      .dropDuplicates("url_hash", "url_hash2")
-      .withColumn("priority", lit(0))
-      .withColumn("depth", lit(0))
-      .withColumn("parent_url", lit(""))
-      .withColumn("discovered_round", lit(0))
-      .withColumn("warc_ts", lit(new Timestamp(0L)))
-      .select((TieredFrontier.feCols :+ "url_hash2").map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // when the RAW seed list is no bigger than one host's head capacity,
-      // no host can overflow (dedupe only shrinks)
-      val headCap = cfg.perHostBudget * TieredFrontier.HeadFactor
-      val backlog = TieredFrontier.writeTiers(spark, warehouse, 0, entries,
-        headCap, fits = seedUrls.size <= headCap)
-      entries.select("url_hash", "url_hash2")
-        .sortWithinPartitions(col("url_hash"))
-        .write.mode("overwrite")
-        .parquet(Snapshots.tablePath(warehouse, 0, "seen_delta"))
-      // sharded Bloom + seed count in one distributed agg grouped by the
-      // url_hash-range shard key (no driver put-loop; S=1 locally, S>1
-      // when expectedUrls exceeds one filter's capacity — ShardedBloom)
-      val (bloom, seedCount) = ShardedBloom.buildShardsWithCount(
-        entries, "url_hash", expectedUrls,
-        ShardedBloom.numShardsFor(expectedUrls))
-      Snapshots.writeBloomShards(warehouse, 0, bloom)
-      Snapshots.writeManifest(warehouse, Snapshots.Manifest(0, -1,
-        seedCount, seedCount, 0, 0, 0, Nil,
-        headCount = seedCount - backlog, backlogPending = backlog,
-        backlogPhysRows = backlog, baseRound = -1))
-    } finally entries.unpersist()
+    val seeds = spark.sparkContext.parallelize(seedUrls, slices).toDF("raw_url")
+      .select(canonUdf(col("raw_url")).as("url"), lit(0).as("priority"),
+        lit(0).as("depth"), lit("").as("parent_url"),
+        lit(0).as("discovered_round"), lit(new Timestamp(0L)).as("warc_ts"))
+    val s = CrawlRound.seed(spark, seeds, cfg, warehouse, expectedUrls, robots)
+    Snapshots.writeBloomShards(warehouse, 0, s.bloom)
+    Snapshots.writeManifest(warehouse, Snapshots.Manifest(0, -1,
+      s.newCount, s.newCount, 0, 0, 0, Nil,
+      headCount = s.newCount - s.backlogCount,
+      backlogPending = s.backlogCount, backlogPhysRows = s.backlogCount,
+      baseRound = -1))
+    s.bloom
   }
 
   /** Final item tables (union of per-round deltas at the latest snapshot). */

@@ -16,8 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * {{{
   * warehouse/
-  *   snap-00000/
-  *     head/ host_state/          frontier head + per-host backlog state
+  *   snap-00000/    written by CrawlRound.seed: the seeds as round 0
+  *     head/          frontier head
+  *     host_state/    per-host backlog state; only while some host is
+  *                    backlogged (the manifest's backlogPending > 0)
   *     backlog_add/ backlog_rm/ backlog_base/   backlog delta segments
   *     seen_delta/    url-hash pairs first enqueued this round
   *     fetched/       the round's fetch working set (item tables and the

@@ -2,7 +2,7 @@ package graft.frontier
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
@@ -24,7 +24,14 @@ import org.apache.spark.storage.StorageLevel
   *    a `backlog_base` when tombstones exceed [[CompactFraction]].
   *  - '''host_state''' — (host_hash, backlog_count, bmin = the backlog's
   *    minimum politeness key): the tiny full-state table driving refill
-  *    decisions without scanning the backlog.
+  *    decisions without scanning the backlog. It lists backlogged hosts
+  *    only, so it is written only in a round whose backlog is in use, and
+  *    a snapshot whose manifest has backlogPending = 0 may have none.
+  *
+  * The head/backlog split itself lives in the round's merge
+  * ([[graft.round.CrawlRound]]): snapshot 0 is a round with no fetch, its
+  * seeds split per host exactly like discovered links. This object owns
+  * the layout: schemas, paths, reads and backlog compaction.
   *
   * Invariant (per host): every backlog entry orders AFTER every head
   * entry, so head-only selection equals full-frontier selection whenever
@@ -100,51 +107,6 @@ object TieredFrontier {
 
   private def existing(paths: Seq[String]): Seq[String] =
     paths.filter(p => Files.exists(Paths.get(p)))
-
-  /** An empty host_state (no backlogged host), with one valid footer. */
-  def writeEmptyHostState(spark: SparkSession, wh: String, round: Int): Unit =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], hostStateSchema)
-      .coalesce(1).write.mode("overwrite").parquet(hostStatePath(wh, round))
-
-  /** Writes round `round`'s tiers from a set of frontier entries: per host
-    * the first `headCap` in the politeness order form the head, the rest
-    * the backlog (`backlog_add` + `host_state`). `fits` = no host can
-    * exceed headCap, so the head is every entry and the per-host window,
-    * overflow agg and backlog write are skipped (3 serial jobs off every
-    * small-seed session). Returns the backlog row count. */
-  def writeTiers(spark: SparkSession, wh: String, round: Int,
-                 entries: DataFrame, headCap: Int, fits: Boolean): Long = {
-    val fe = feCols.map(col)
-    if (fits) {
-      entries.select(fe: _*).write.mode("overwrite").parquet(headPath(wh, round))
-      writeEmptyHostState(spark, wh, round)
-      return 0L
-    }
-    val ranked = entries.withColumn("rn", row_number().over(hostWindow))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val overflow = ranked.filter(col("rn") > headCap).select(fe: _*)
-    // host_state rows carry the backlog's per-host minimum key (the
-    // head/backlog ordering invariant); derived with one tiny agg, and its
-    // collected rows (≤ overflowing hosts) give the overflow count
-    // without an extra job
-    val hostState = overflow.groupBy(col("host_hash"))
-      .agg(count(lit(1)).as("backlog_count"), min(keyCol).as("bmin"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      ranked.filter(col("rn") <= headCap).select(fe: _*)
-        .write.mode("overwrite").parquet(headPath(wh, round))
-      val n = hostState.agg(coalesce(sum(col("backlog_count")), lit(0L)))
-        .collect()(0).getLong(0)
-      if (n > 0)
-        overflow.withColumn("host_bucket",
-          graft.round.CrawlRound.hostBucketCol(col("host_hash")))
-          .write.mode("overwrite").partitionBy("host_bucket")
-          .parquet(addPath(wh, round))
-      hostState.coalesce(1).write.mode("overwrite")
-        .parquet(hostStatePath(wh, round))
-      n
-    } finally { hostState.unpersist(); ranked.unpersist() }
-  }
 
   /** Pending backlog at round `upTo`: (base at baseRound if any) ∪ adds in
     * (baseRound, upTo] minus tombstones in (baseRound, upTo]. Pass

@@ -143,23 +143,9 @@ object Dedup {
   def minHashLsh(df: DataFrame, textCol: String, idCol: String,
                  numHashes: Int = 16, bands: Int = 4,
                  threshold: Double = 0.8): DataFrame = {
-    val rows = numHashes / bands
-    val sigUdf = minHashUdf(numHashes)
-    val bandUdf = udf((sig: Seq[Long], b: Int) => bandHash(sig.toArray, b, rows))
     val shUdf = shinglesUdf(3)
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    val banded = base
-      .withColumn("sig", sigUdf(col("text")))
-      .select(col("id"), explode(sequence(lit(0), lit(bands - 1))).as("band"),
-        col("sig"))
-      .withColumn("bh", bandUdf(col("sig"), col("band")))
-      .select(col("id"), col("band"), col("bh"))
-      .localCheckpoint() // ids-only: 24 B/row at any scale, one sig pass
-    val a = banded.select(col("band"), col("bh"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("bh"), col("id").as("id_b"))
-    val candidates = a.join(b, Seq("band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
+    val candidates = minHashBandPairs(base, numHashes, bands)
       .localCheckpoint() // consumed 3× below (candIds + both pair joins)
     // true late materialization: shingles computed ONLY for candidate ids
     val candIds = candidates.select(col("id_a").as("id"))
@@ -177,29 +163,38 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Distinct candidate-pair count the band join admits (pre-verification)
-    * — the structural cost [[minHashLsh]] pays for Jaccard evaluation, for
-    * scaling evidence (graft.DedupBench). Same band-join shape as
-    * minHashLsh; near-linear growth in the corpus is the claim under test
-    * (quadratic growth here would mean the bands stopped discriminating). */
-  def minHashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        numHashes: Int = 16, bands: Int = 4): Long = {
+  /** The DISTINCT (id_a < id_b) pairs sharing a band hash — the one
+    * candidate generator of [[minHashLsh]] and [[minHashCandidates]].
+    * `base` is (id, text). */
+  private def minHashBandPairs(base: DataFrame, numHashes: Int,
+                               bands: Int): DataFrame = {
     val rows = numHashes / bands
     val sigUdf = minHashUdf(numHashes)
     val bandUdf = udf((sig: Seq[Long], b: Int) => bandHash(sig.toArray, b, rows))
-    val banded = df.select(col(idCol).as("id"), col(textCol).as("text"))
+    val banded = base
       .withColumn("sig", sigUdf(col("text")))
       .select(col("id"), explode(sequence(lit(0), lit(bands - 1))).as("band"),
         col("sig"))
       .withColumn("bh", bandUdf(col("sig"), col("band")))
       .select(col("id"), col("band"), col("bh"))
-    banded.select(col("band"), col("bh"), col("id").as("id_a"))
-      .join(banded.select(col("band"), col("bh"), col("id").as("id_b")),
-        Seq("band", "bh"))
+      .localCheckpoint() // ids-only: 24 B/row at any scale, one sig pass
+    val a = banded.select(col("band"), col("bh"), col("id").as("id_a"))
+    val b = banded.select(col("band"), col("bh"), col("id").as("id_b"))
+    a.join(b, Seq("band", "bh"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
-      .count()
   }
+
+  /** Distinct candidate-pair count the band join admits (pre-verification)
+    * — the structural cost [[minHashLsh]] pays for Jaccard evaluation, for
+    * scaling evidence (graft.DedupBench), counted on minHashLsh's own
+    * band table and self-join; near-linear growth in the corpus is the
+    * claim under test (quadratic growth here would mean the bands stopped
+    * discriminating). */
+  def minHashCandidates(df: DataFrame, textCol: String, idCol: String,
+                        numHashes: Int = 16, bands: Int = 4): Long =
+    minHashBandPairs(df.select(col(idCol).as("id"), col(textCol).as("text")),
+      numHashes, bands).count()
 
   /** Duplicate CLUSTERS over confirmed near-dup pairs (e.g. the output of
     * [[minHashLsh]] or [[simHashPairs]]): every doc appearing in any pair
@@ -360,7 +355,19 @@ object Dedup {
   }
 
   private def simHashPairsAt(df: DataFrame, textCol: String, idCol: String,
-                             maxHamming: Int, numBlocks: Int): DataFrame = {
+                             maxHamming: Int, numBlocks: Int): DataFrame =
+    simHashBlockPairs(df, textCol, idCol, maxHamming, numBlocks)
+      .select(col("id_a"), col("id_b"), col("sim_a"), col("sim_b")).distinct()
+      .withColumn("hamming",
+        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+      .filter(col("hamming") <= maxHamming)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+
+  /** The (id_a < id_b) rows of the block-table self-join, with both
+    * simhashes — the one candidate generator of [[simHashPairs]] and
+    * [[simHashCandidates]]. */
+  private def simHashBlockPairs(df: DataFrame, textCol: String, idCol: String,
+                                maxHamming: Int, numBlocks: Int): DataFrame = {
     require(numBlocks > maxHamming,
       s"pigeonhole needs numBlocks ($numBlocks) > maxHamming ($maxHamming)")
     val keysUdf = udf((sim: Long) =>
@@ -375,36 +382,20 @@ object Dedup {
       col("sim").as("sim_b"))
     a.join(b, Seq("bk"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("sim_a"), col("sim_b")).distinct()
-      .withColumn("hamming",
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
   /** Distinct candidate-pair count the simhash block-combination join
     * admits (pre-verification) — the structural cost [[simHashPairs]]
-    * pays for popcount evaluation, for scaling evidence
-    * (graft.DedupBench): near-linear growth at 10× docs is the claim the
-    * b>4 combination tables exist to keep true at corpus scale.
-    * `numBlocks` has no default: the count must describe the blocking the
-    * caller measured (`simHashPairs` picks 4 or 6 by corpus size). */
+    * pays for popcount evaluation, counted on its own block table and
+    * join, for scaling evidence (graft.DedupBench): near-linear growth at
+    * 10× docs is the claim the b>4 combination tables exist to keep true
+    * at corpus scale. `numBlocks` has no default: the count must describe
+    * the blocking the caller measured (`simHashPairs` picks 4 or 6 by
+    * corpus size). */
   def simHashCandidates(df: DataFrame, textCol: String, idCol: String,
-                        numBlocks: Int, maxHamming: Int = 3): Long = {
-    require(numBlocks > maxHamming,
-      s"pigeonhole needs numBlocks ($numBlocks) > maxHamming ($maxHamming)")
-    val keysUdf = udf((sim: Long) =>
-      simHashComboKeys(sim, numBlocks, maxHamming))
-    val blocks = df.select(col(idCol).as("id"),
-      simHashUdf(col(textCol)).as("sim"))
-      .select(col("id"), explode(keysUdf(col("sim"))).as("bk"))
-      .localCheckpoint()
-    blocks.select(col("bk"), col("id").as("id_a"))
-      .join(blocks.select(col("bk"), col("id").as("id_b")), Seq("bk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .count()
-  }
+                        numBlocks: Int, maxHamming: Int = 3): Long =
+    simHashBlockPairs(df, textCol, idCol, maxHamming, numBlocks)
+      .select(col("id_a"), col("id_b")).distinct().count()
 
   /** Exact n-gram Jaccard over candidate pairs from a cheap length-bucket
     * blocking (the brute-force baseline for MinHash recall measurement). */

@@ -110,7 +110,15 @@ object Similarity {
     * bucket join carries ONLY (bucket, id) longs, never the vectors. */
   private def lshCandidatePairs(corpus: DataFrame, queries: DataFrame,
                                 vecCol: String, idCol: String,
-                                numPlanes: Int, numTables: Int): DataFrame = {
+                                numPlanes: Int, numTables: Int): DataFrame =
+    lshBucketJoin(corpus, queries, vecCol, idCol, numPlanes, numTables)
+      .distinct()
+
+  /** Every (query_id, corpus_id) co-hit of the bucket join, before the
+    * dedup — one row per shared table. */
+  private def lshBucketJoin(corpus: DataFrame, queries: DataFrame,
+                            vecCol: String, idCol: String,
+                            numPlanes: Int, numTables: Int): DataFrame = {
     val bucketsUdf = udf((v: Seq[Float]) =>
       tableBuckets(v.toArray, numPlanes, numTables))
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
@@ -121,7 +129,7 @@ object Similarity {
       .select(col("bucket"), col("query_id"))
     c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("corpus_id"))
-      .select(col("query_id"), col("corpus_id")).distinct()
+      .select(col("query_id"), col("corpus_id"))
   }
 
   def lshTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
@@ -145,20 +153,11 @@ object Similarity {
   }
 
   /** Number of candidate pairs the bucket join admits (pre-dedup) — the
-    * cosine-evaluation cost [[lshTopK]] actually pays, for recall/cost
-    * evidence (graft.AnnBench). Same join shape as lshTopK. */
+    * row traffic of [[lshTopK]]'s bucket join, counted on that join itself,
+    * for recall/cost evidence (graft.AnnBench). */
   def lshCandidates(corpus: DataFrame, queries: DataFrame, vecCol: String,
-                    idCol: String, numPlanes: Int, numTables: Int): Long = {
-    val bucketsUdf = udf((v: Seq[Float]) =>
-      tableBuckets(v.toArray, numPlanes, numTables))
-    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"))
-      .withColumn("bucket", explode(bucketsUdf(col("cv")))).drop("cv")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("bucket", explode(bucketsUdf(col("qv")))).drop("qv")
-    c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("corpus_id"))
-      .count()
-  }
+                    idCol: String, numPlanes: Int, numTables: Int): Long =
+    lshBucketJoin(corpus, queries, vecCol, idCol, numPlanes, numTables).count()
 
   /** DISTINCT candidate pairs — the cosine evaluations [[lshTopK]] pays
     * after the pre-score dedup (vs [[lshCandidates]]'s raw bucket-join

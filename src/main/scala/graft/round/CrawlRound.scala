@@ -9,7 +9,7 @@ import graft.expressions.UrlExpressions.{robotsAllowed, urlHash, urlHash2,
 import graft.frontier.{InternalRows, PartitionLineage, ShardedBloom, Snapshots,
   TieredFrontier}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One crawl round as a declarative Dataset pipeline (north_rule):
@@ -48,8 +48,11 @@ import org.apache.spark.sql.functions._
   *    the backlog delta and host-state upkeep) is likewise off the
   *    critical path; all bookkeeping counts are derived arithmetically
   *    (pending' = pending - selected + new). A steady round (no
-  *    overflow, no backlog) runs about 18 Spark jobs, broadcast and
-  *    shuffle-stage jobs included;
+  *    overflow, no backlog) runs 17-20 Spark jobs on crawl_deep,
+  *    broadcast and shuffle-stage jobs included: fetch 4, expand 3,
+  *    delta-bloom 2-4, misses 2, seen-delta 1-2, merge 1-2 (the overflow
+  *    probe), head 1-2, lineage 1 — and no host_state write, since
+  *    host_state exists only while some host is backlogged;
   *  - discovered-link dedup is a groupBy on url (map-side partial agg),
   *    then a Bloom broadcast probe drops the overwhelmingly-seen majority;
   *    suspects are confirmed WITHOUT shuffling the seen table (no false
@@ -57,7 +60,7 @@ import org.apache.spark.sql.functions._
   *
   * Generated-code budget: Spark's codegen cache holds 100 classes, and in
   * local mode a whole-stage class takes two entries (driver compile check
-  * + executor task). A steady round uses about 77 entries; a plan that
+  * + executor task). A steady round uses about 76 entries; a plan that
   * needs more makes every round recompile its own classes. Hence: no
   * per-round literal inside a round plan (the round number is read from
   * the snapshot dir, see [[Snapshots.roundOfFile]]), bookkeeping counts
@@ -202,19 +205,18 @@ object CrawlRound {
                                  links: Seq[LinkDto],
                                  text: String)
 
-  final case class RoundResult(selectedCount: Long,
-                               fetchedCount: Long,
+  final case class RoundResult(fetchedCount: Long,
                                errorCount: Long,
-                               discoveredCount: Long,
                                newCount: Long,
                                dedupedCount: Long,
-                               overflowCount: Long,
-                               refillCount: Long,
                                state: FrontierState,
                                deltaBloom: Option[Array[Array[Byte]]],
-                               lineage: Seq[PartitionLineage]) {
-    def frontierCount: Long = state.pending
-  }
+                               lineage: Seq[PartitionLineage])
+
+  /** Snapshot 0's outcome: the seeds entered, how many of them went to the
+    * backlog, and their Bloom — snapshot 0's cumulative filter. */
+  final case class SeedResult(newCount: Long, backlogCount: Long,
+                              bloom: Array[Array[Byte]])
 
   def hostBucketOf(hostHash: Long): Int =
     (((hostHash % NumHostBuckets) + NumHostBuckets) % NumHostBuckets).toInt
@@ -313,6 +315,35 @@ object CrawlRound {
       p.sideWrites(fetch, exp, merge, refill)
     }
 
+  /** Writes snapshot 0 (`head`, `seen_delta`, and `backlog_add` +
+    * `host_state` when the seeds overflow a host) as a round with no
+    * fetch: `seeds` (canonical `url` plus the link columns) enter the
+    * frontier the way discovered links do — the round's link dedupe,
+    * new-entry side jobs and tier merge. Nothing is seen yet, so there is
+    * no probe and no confirm, and no filter to broadcast. The delta Bloom
+    * is built with the cumulative filter's geometry, so it IS snapshot
+    * 0's cumulative filter. The manifest is the caller's commit. */
+  def seed(spark: SparkSession, seeds: DataFrame, cfg: Crawl.CrawlConfig,
+           warehouse: String, expectedUrls: Long,
+           robots: Map[String, Vector[String]]): SeedResult =
+    RoundScope(spark.sparkContext, 0) { scope =>
+      val p = new Phases(spark, cfg, 0, warehouse,
+        FrontierState(0L, 0L, 0L, 0L, -1), scope)
+      val exp = scope.phase("expand")(p.newEntryJobs(
+        p.dedupeLinks(seeds, robots), expectedUrls,
+        ShardedBloom.numShardsFor(expectedUrls)))
+      val noHead = spark.createDataFrame(java.util.List.of[Row](),
+        TieredFrontier.feSchema)
+      val merge = p.mergeOverflow(noHead, exp.newEntries)
+      // no backlog yet, so no refill: this only rewrites the head when
+      // the seeds overflow a host
+      val refill = p.refillReconcile(merge)
+      val backlogCount =
+        scope.phase("side-writes")(p.backlogWrites(merge, refill))
+      val (bloom, newCount) = scope.await(exp.deltaBloom)
+      SeedResult(newCount, scope.await(backlogCount), bloom)
+    }
+
   private val feColsC = TieredFrontier.feCols.map(col)
 
   // values the phases hand to each other
@@ -321,11 +352,13 @@ object CrawlRound {
   /** `lineage`: (fetch partition, pages, links) per fetch partition. */
   private final case class Fetch(fetched: DataFrame,
                                  lineage: Future[Seq[(Int, Long, Long)]])
+  /** `deltaBloom`: the new entries' Bloom shards and count. */
   private final case class Expansion(newEntries: DataFrame,
-      deltaBloom: Future[(Option[Array[Array[Byte]]], Long)])
-  /** `newWorse` and `overflow` are None when known empty; `remainingCount`
-    * is the number of head rows the selection left behind. */
-  private final case class Merge(prevHostState: DataFrame,
+      deltaBloom: Future[(Array[Array[Byte]], Long)])
+  /** `prevHostState`, `newWorse` and `overflow` are None when known empty;
+    * `remainingCount` is the number of head rows the selection left
+    * behind. */
+  private final case class Merge(prevHostState: Option[DataFrame],
                                  newWorse: Option[DataFrame], kept: DataFrame,
                                  overflow: Option[DataFrame],
                                  mergedCounts: DataFrame, remainingCount: Long,
@@ -456,7 +489,7 @@ object CrawlRound {
     }
 
     /** Discovered links → in-round dedup → Bloom probe → exact confirm of
-      * the suspects; writes `seen_delta` and builds the delta Bloom. */
+      * the suspects → the new-entry side jobs. */
     def expandConfirm(fetched: DataFrame, seen: DataFrame,
                       bloom: Array[Array[Byte]], expectedUrls: Long,
                       robots: Map[String, Vector[String]]
@@ -471,20 +504,28 @@ object CrawlRound {
         .select(col("l.url").as("url"), col("l.depth").as("depth"),
           col("l.priority").as("priority"), col("parent_url"), col("warc_ts"),
           col("discovered_round"))
+      newEntryJobs(confirmUnseen(dedupeLinks(rawLinks, robots), seen, bloom),
+        expectedUrls, bloom.length)
+    }
 
+    /** Link dedupe: the robots gate, then one row per canonical url, with
+      * the frontier keys. `links` carries url, priority, warc_ts, depth,
+      * parent_url and discovered_round. */
+    def dedupeLinks(links: DataFrame,
+                    robots: Map[String, Vector[String]]): DataFrame = {
       // robots gate (T3) at ENQUEUE time: blocked urls never enter the
       // frontier or the seen set (default off — ROBOTSTXT_OBEY=False in the
       // reference); gating here keeps the frontier-count arithmetic exact.
       // Native codegen'd expression, not a UDF — this sits on the per-link
       // hot path when enabled.
-      val gatedLinks =
+      val gated =
         if (cfg.obeyRobots && robots.nonEmpty)
-          rawLinks.filter(robotsAllowed(col("url"), robots))
-        else rawLinks
+          links.filter(robotsAllowed(col("url"), robots))
+        else links
 
       // in-round dedup: one deterministic representative per url (min
       // struct; discovered_round is the same on every row)
-      val candidates = withUrlKeys(gatedLinks
+      withUrlKeys(gated
         .groupBy(col("url"))
         .agg(min(struct(col("priority"), col("warc_ts"), col("depth"),
           col("parent_url"), col("discovered_round"))).as("m"))
@@ -492,7 +533,12 @@ object CrawlRound {
           col("m.warc_ts").as("warc_ts"), col("m.depth").as("depth"),
           col("m.parent_url").as("parent_url"),
           col("m.discovered_round").as("discovered_round")))
+    }
 
+    /** The deduped links no earlier round has seen: Bloom probe, suspect
+      * count, exact confirm of the suspects. */
+    private def confirmUnseen(candidates: DataFrame, seen: DataFrame,
+                              bloom: Array[Array[Byte]]): DataFrame = {
       // Bloom pre-filter (broadcast probe); suspects confirmed WITHOUT
       // shuffling the seen table in ANY regime (see confirmNew).
       // Zero-suspect rounds (Bloom cleared everything) skip the exact
@@ -522,21 +568,23 @@ object CrawlRound {
       val nSuspects = rowCount(suspects)
       // the confirm filters every candidate in one pass: the Bloom-cleared
       // ones are absent from seen, so they pass the anti join untouched
-      val confirmed =
-        if (nSuspects == 0) probed
-        else confirmNew(seen, suspects, nSuspects, rows = Some(probed))
+      if (nSuspects == 0) probed
+      else confirmNew(seen, suspects, nSuspects, rows = Some(probed))
+    }
+
+    /** New entries → cached frontier rows, plus their side jobs: the delta
+      * Bloom (`numShards` shards, the cumulative filter's geometry, so the
+      * driver's round-boundary merge is a per-shard OR) and `seen_delta`. */
+    def newEntryJobs(fresh: DataFrame, expectedUrls: Long,
+                     numShards: Int): Expansion = {
       // url_hash2 rides along ONLY into seen_delta (the confirm pair key);
       // the frontier schema stays url_hash-only
       val newEntries = scope.persist(
-        confirmed.select(feColsC :+ col("url_hash2"): _*))
-
-      // delta Bloom + new count in ONE small job over the cached delta;
-      // delta shards share the cumulative filter's shard count + geometry
-      // so the driver's round-boundary merge is a per-shard OR
+        fresh.select(feColsC :+ col("url_hash2"): _*))
+      // delta Bloom + new count in ONE small job over the cached delta
       val deltaBloom = scope.future("delta-bloom") {
-        val (shards, n) = ShardedBloom.buildShardsWithCount(
-          newEntries, "url_hash", expectedUrls, bloom.length)
-        (if (n == 0) None else Some(shards), n)
+        ShardedBloom.buildShardsWithCount(newEntries, "url_hash",
+          expectedUrls, numShards)
       }
       // seen_delta persisted sorted for parquet min/max range pruning at scale
       scope.future("seen-delta") {
@@ -559,26 +607,27 @@ object CrawlRound {
       * O(head + new) — backlog size irrelevant. */
     def mergeOverflow(remaining: DataFrame, newEntries: DataFrame): Merge =
       scope.phase("merge") {
-        // not cached: a tiny parquet table, cheaper to re-read than to
-        // cache and scan
-        val prevHostState =
-          TieredFrontier.readHostState(spark, warehouse, round - 1)
         // host_state lists backlogged hosts only, so with an empty backlog
-        // (exact manifest arithmetic) every new entry competes for the head
-        // and the bmin join is skipped
-        val (newBetter, newWorse) =
-          if (state.backlogPending <= 0) (newEntries, None)
-          else {
+        // (exact manifest arithmetic) there is none to read, every new
+        // entry competes for the head and the bmin join is skipped. Not
+        // cached: a tiny parquet table, cheaper to re-read than to cache
+        // and scan.
+        val prevHostState =
+          if (state.backlogPending <= 0) None
+          else Some(TieredFrontier.readHostState(spark, warehouse, round - 1))
+        val (newBetter, newWorse) = prevHostState match {
+          case None => (newEntries, None)
+          case Some(hs) =>
             val key = TieredFrontier.keyCol
             val newWithMin = newEntries.join(
-              prevHostState.filter(col("backlog_count") > 0)
+              hs.filter(col("backlog_count") > 0)
                 .select(col("host_hash"), col("bmin")),
               Seq("host_hash"), "left")
             (newWithMin.filter(col("bmin").isNull || key < col("bmin"))
               .drop("bmin"),
               Some(newWithMin.filter(col("bmin").isNotNull && key > col("bmin"))
                 .drop("bmin")))
-          }
+        }
 
         // merged is NOT cached in the common no-overflow round: a
         // full-row (url + parent_url strings) cache WRITE of the whole next
@@ -662,25 +711,23 @@ object CrawlRound {
       * `newWorse` joins the refill pool so a fresh link can still be
       * promoted if it outranks the backlog. */
     def refillReconcile(m: Merge): Refill = scope.phase("refill") {
-      // Driver-side shortcut: the manifest's backlogPending arithmetic is
-      // exact, so a backlog-less crawl (the common steady shape here) skips
-      // the whole refill decision — no keptCounts aggregation, no collect,
-      // no backlog read: two serial jobs gone from every such round.
-      val needs =
-        if (state.backlogPending <= 0) None
-        else {
-          val keptCounts =
-            if (m.noOverflow) m.mergedCounts.select(col("host_hash"),
-              col("n").as("head_n"))
-            else m.kept.groupBy(col("host_hash"))
-              .agg(count(lit(1)).as("head_n"))
-          Some(scope.persist(m.prevHostState.filter(col("backlog_count") > 0)
-            .join(keptCounts, Seq("host_hash"), "left")
-            .select(col("host_hash"),
-              coalesce(col("head_n"), lit(0L)).as("head_n"))
-            .filter(col("head_n") < cfg.perHostBudget)
-            .withColumn("need", lit(headCap.toLong) - col("head_n"))))
-        }
+      // Driver-side shortcut: a backlog-less crawl (the common steady
+      // shape here) has no previous host_state (see mergeOverflow) and
+      // skips the whole refill decision — no keptCounts aggregation, no
+      // collect, no backlog read: two serial jobs gone from every such round.
+      val needs = m.prevHostState.map { hs =>
+        val keptCounts =
+          if (m.noOverflow) m.mergedCounts.select(col("host_hash"),
+            col("n").as("head_n"))
+          else m.kept.groupBy(col("host_hash"))
+            .agg(count(lit(1)).as("head_n"))
+        scope.persist(hs.filter(col("backlog_count") > 0)
+          .join(keptCounts, Seq("host_hash"), "left")
+          .select(col("host_hash"),
+            coalesce(col("head_n"), lit(0L)).as("head_n"))
+          .filter(col("head_n") < cfg.perHostBudget)
+          .withColumn("need", lit(headCap.toLong) - col("head_n")))
+      }
       val picks = needs.flatMap { rn =>
         val buckets = rn.select(hostBucketCol(col("host_hash")).as("b"))
           .distinct().collect().map(_.getInt(0)).toSeq.sorted
@@ -740,13 +787,18 @@ object CrawlRound {
     }
 
     /** host_state' = host_state + this round's backlog adds − refill picks,
-      * with each host's new backlog minimum. */
-    private def writeHostState(backlogAdd: DataFrame, prevHostState: DataFrame,
+      * with each host's new backlog minimum. `prevHostState` is None when
+      * no host was backlogged before this round (hence no refill either). */
+    private def writeHostState(backlogAdd: DataFrame,
+                               prevHostState: Option[DataFrame],
                                r: Refill): Unit = {
       val addStats = backlogAdd.groupBy(col("host_hash"))
         .agg(count(lit(1)).as("d_add"),
           min(TieredFrontier.keyCol).as("add_min"))
-      val st0 = prevHostState.join(addStats, Seq("host_hash"), "full_outer")
+      val st0 = prevHostState.fold(addStats
+          .withColumn("backlog_count", lit(0L))
+          .withColumn("bmin", lit(null).cast(TieredFrontier.keyType)))(
+        _.join(addStats, Seq("host_hash"), "full_outer"))
       val st = r.picks match {
         case Some(p) => st0
           .join(p.rm.groupBy(col("host_hash")).agg(count(lit(1)).as("d_rm")),
@@ -775,10 +827,11 @@ object CrawlRound {
         .write.mode("overwrite").parquet(path("host_state"))
     }
 
-    /** Backlog deltas + host-state upkeep off the critical path, then the
-      * bookkeeping — all counts arithmetic, no count jobs on big tables. */
-    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge,
-                   r: Refill): RoundResult = scope.phase("side-writes") {
+    /** Backlog deltas + host-state upkeep off the critical path. host_state
+      * is written only when the backlog is in use this round (a head
+      * overflow, or a backlog carried in), so a backlog-less round writes
+      * none. Returns the future count of rows added to the backlog. */
+    def backlogWrites(m: Merge, r: Refill): Future[Long] = {
       // backlog additions: head overflow + new entries that rank behind the
       // backlog minimum, MINUS any promoted during refill; None when both
       // are known empty (no overflow, no backlog — the common round)
@@ -801,14 +854,18 @@ object CrawlRound {
         r.picks.foreach(_.rm.write.mode("overwrite").parquet(path("backlog_rm")))
         overflowCount
       }
-      scope.future("host-state") {
-        backlogAdd match {
-          // no adds, hence no refill either (it needs a backlog): the
-          // previous host_state is empty and stays so
-          case None => TieredFrontier.writeEmptyHostState(spark, warehouse, round)
-          case Some(add) => writeHostState(add, m.prevHostState, r)
-        }
-      }
+      // no adds means no backlog before or after this round (nor a refill,
+      // which needs one): no host_state to write
+      backlogAdd.foreach(add => scope.future("host-state")(
+        writeHostState(add, m.prevHostState, r)))
+      backlogWrite
+    }
+
+    /** The round's side writes, then the bookkeeping — all counts
+      * arithmetic, no count jobs on big tables. */
+    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge,
+                   r: Refill): RoundResult = scope.phase("side-writes") {
+      val backlogWrite = backlogWrites(m, r)
 
       // selected + remaining = head (exact manifest arithmetic)
       val selectedCount = state.headCount - m.remainingCount
@@ -824,7 +881,7 @@ object CrawlRound {
       require(errorCount >= 0,
         s"round $round: fetched ($fetchedCount) > selected ($selectedCount); " +
           "pages table violates the unique-(host_bucket,url) contract")
-      val (deltaBloom, newCount) = scope.await(exp.deltaBloom)
+      val (deltaShards, newCount) = scope.await(exp.deltaBloom)
       val overflowCount = scope.await(backlogWrite)
       val rmCount = r.picks.fold(0L)(p => scope.await(p.rmCount))
       val dedupedCount = discoveredCount - newCount
@@ -841,9 +898,8 @@ object CrawlRound {
       // the remaining side writes (misses, seen_delta, head, host_state)
       // are awaited by the scope before run() returns — the caller's
       // manifest commit makes this round visible to resume
-      RoundResult(selectedCount, fetchedCount, errorCount, discoveredCount,
-        newCount, dedupedCount, overflowCount, rmCount, newState,
-        deltaBloom, lineage)
+      RoundResult(fetchedCount, errorCount, newCount, dedupedCount, newState,
+        Option.when(newCount > 0)(deltaShards), lineage)
     }
   }
 }

@@ -88,7 +88,7 @@ class TieredFrontierSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     // 40 seeds on ONE host vs headCap = 8 × 2 = 16 ⇒ seed-time overflow
-    // (the small-seed fast path must NOT be taken); pages is EMPTY so
+    // (the seeds go through the round's per-host split); pages is EMPTY so
     // every fetch misses and the loop drains the frontier 2/round,
     // refilling the head from the seed backlog along the way
     val seedUrls = (0 until 40).map(i => s"http://only.example.com/p/$i")
