@@ -54,10 +54,13 @@ object Crawl {
 
   final case class Link(url: String, depth: Int, priority: Int)
 
+  /** One page's items and links. The round's fetch UDF returns it as is,
+    * so its field names are the columns of `fetched`'s `out` struct —
+    * snake_case, like the item classes. */
   final case class PageOutput(posts: Vector[PostItem] = Vector.empty,
                               replies: Vector[ReplyItem] = Vector.empty,
                               comments: Vector[CommentItem] = Vector.empty,
-                              tiebaNames: Vector[String] = Vector.empty,
+                              tieba_names: Vector[String] = Vector.empty,
                               links: Vector[Link] = Vector.empty,
                               text: String = "")
 
@@ -134,7 +137,7 @@ object Crawl {
         // set() semantics (PostSpider.py:171) → distinct, order pinned to
         // first occurrence (Python set order is nondeterministic; we
         // canonicalize — SURVEY.md §5.1)
-        PageOutput(tiebaNames = parsed.forumNames.distinct, text = parsed.text)
+        PageOutput(tieba_names = parsed.forumNames.distinct, text = parsed.text)
 
       case _ => PageOutput(text = parsed.text)
     }

@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * round's frontier back from the committed snapshot both breaks Spark
   * lineage (no ever-growing plan across iterations) and makes
   * cancel ≡ stop-after-round and resume ≡ load-latest-snapshot (T6/T7).
+  *
+  * The seed ([[CrawlRound.seed]]) and every round ([[CrawlRound.run]])
+  * return their manifest and delta Bloom uncommitted, and all snapshots,
+  * snapshot 0 included, commit through one path: OR the delta into the
+  * cumulative filter, compact the backlog when tombstones dominate, write
+  * the Bloom, then the manifest.
   */
 object CrawlLoop {
 
@@ -46,85 +52,67 @@ object CrawlLoop {
           robots: Map[String, Vector[String]] = Map.empty): CrawlSummary = {
     import spark.implicits._
 
-    // the cumulative Bloom (shard array) lives in driver memory across
-    // rounds (it is merged here anyway); the per-round file write remains
-    // the resume source of truth, but only a resumed run's first round
-    // reads it
-    var bloomShards: Array[Array[Byte]] = null
-    var round = Snapshots.latestCommittedRound(warehouse) match {
-      case Some(r) if resume => r + 1
+    // the last committed manifest and the cumulative Bloom (shard array),
+    // which lives in driver memory across rounds: the per-round file write
+    // is the resume source of truth, read only when resuming
+    val (start, bloom) = Snapshots.latestCommittedRound(warehouse) match {
+      case Some(r) if resume => (Snapshots.readManifest(warehouse, r).get,
+        Snapshots.readBloomShards(warehouse, r))
       case Some(_) =>
         sys.error(s"warehouse $warehouse already has snapshots; pass resume=true")
-      case None =>
-        bloomShards =
-          seedSnapshot(spark, seedUrls, cfg, warehouse, expectedUrls, robots)
-        1
+      case None => (Snapshots.EmptyManifest, ShardedBloom.empty(expectedUrls,
+        numShards = ShardedBloom.numShardsFor(expectedUrls)))
     }
-    var totalFetched = 0L
-    var totalErrors = 0L
-    var totalDeduped = 0L
-    // derived arithmetically per round: pending' = pending - selected + new.
-    // Round - 1 is always committed (snapshot 0 from seedSnapshot, or the
-    // latest round on resume), and its headCount is the trusted upper
-    // bound CrawlRound gates the fetch join on.
-    val start = Snapshots.readManifest(warehouse, round - 1).getOrElse(
-      sys.error(s"warehouse $warehouse: no manifest for round ${round - 1}"))
-    var state = CrawlRound.FrontierState(start.frontierCount, start.headCount,
-      start.backlogPending, start.backlogPhysRows, start.baseRound)
+    var prev = start
+    var committed = Vector.empty[Snapshots.Manifest]
 
-    while (state.pending != 0L && round <= cfg.maxRounds &&
+    // The one commit path, for snapshot 0 and every round. Incremental
+    // Bloom merge (north_rule "merge deltas at round boundaries"): the
+    // round built its delta Bloom DISTRIBUTED with the cumulative filter's
+    // geometry; one bitwise OR here — the driver never sees raw hashes,
+    // only two bitsets. Amortized backlog compaction: rewrite pending as a
+    // fresh base once tombstones dominate (keeps refill scans and reader
+    // anti-joins bounded without any per-round rewrite); snapshot 0 has no
+    // tombstones. The manifest is written last: it is the commit marker.
+    def commit(result: (Snapshots.Manifest, Array[Array[Byte]])): Unit = {
+      val (m, delta) = result
+      ShardedBloom.mergeInto(bloom, delta)
+      val tombstones = m.backlogPhysRows - m.backlogPending
+      val done =
+        if (m.backlogPhysRows > TieredFrontier.CompactMinRows &&
+          tombstones > TieredFrontier.CompactFraction * m.backlogPhysRows)
+          m.copy(backlogPhysRows = TieredFrontier.compact(spark, warehouse,
+            m.round, m.baseRound), baseRound = m.round)
+        else m
+      Snapshots.writeBloomShards(warehouse, done.round, bloom)
+      Snapshots.writeManifest(warehouse, done)
+      prev = done
+      committed :+= done
+    }
+
+    if (prev.round < 0)
+      commit(seedSnapshot(spark, seedUrls, cfg, warehouse, expectedUrls, robots))
+    // prev.headCount is the trusted upper bound CrawlRound gates the fetch
+    // join on
+    while (prev.frontierCount != 0L && prev.round < cfg.maxRounds &&
       !Files.exists(Paths.get(warehouse, CancelMarker))) {
-      val prev = round - 1
-      val head = TieredFrontier.readHead(spark, warehouse, prev)
-      val seen = Snapshots.readTable(spark, warehouse, "seen_delta", prev)
+      val head = TieredFrontier.readHead(spark, warehouse, prev.round)
+      val seen = Snapshots.readTable(spark, warehouse, "seen_delta", prev.round)
         .getOrElse(Seq.empty[(Long, Long)].toDF("url_hash", "url_hash2"))
-      val bloom = Option(bloomShards)
-        .getOrElse(Snapshots.readBloomShards(warehouse, prev))
-
-      // the round writes fetched/misses/head/backlog deltas/host_state/
-      // seen_delta itself; manifest below is the commit marker
-      val res = CrawlRound.run(spark, head, pages, seen, bloom, cfg,
-        round, warehouse, state, expectedUrls, robots)
-
-      // incremental Bloom merge (north_rule "merge deltas at round
-      // boundaries"): the round built this delta's Bloom DISTRIBUTED with
-      // the cumulative filter's geometry; one bitwise OR here — the driver
-      // never sees raw hashes, only two bitsets.
-      bloomShards = res.deltaBloom.fold(bloom)(ShardedBloom.mergeInto(bloom, _))
-      Snapshots.writeBloomShards(warehouse, round, bloomShards)
-      state = res.state
-
-      // amortized backlog compaction: rewrite pending as a fresh base once
-      // tombstones dominate (keeps refill scans and reader anti-joins
-      // bounded without any per-round rewrite)
-      val tombstones = state.backlogPhysRows - state.backlogPending
-      if (state.backlogPhysRows > TieredFrontier.CompactMinRows &&
-        tombstones > TieredFrontier.CompactFraction * state.backlogPhysRows) {
-        val physAfter = TieredFrontier.compact(spark, warehouse, round,
-          state.baseRound)
-        state = state.copy(backlogPhysRows = physAfter, baseRound = round)
-      }
-
-      Snapshots.writeManifest(warehouse, Snapshots.Manifest(round, prev,
-        state.pending, res.newCount, res.fetchedCount, res.errorCount,
-        res.dedupedCount, res.lineage, headCount = state.headCount,
-        backlogPending = state.backlogPending,
-        backlogPhysRows = state.backlogPhysRows, baseRound = state.baseRound))
-
-      totalFetched += res.fetchedCount
-      totalErrors += res.errorCount
-      totalDeduped += res.dedupedCount
-      round += 1
+      // the round writes its tables itself; commit() makes it visible
+      commit(CrawlRound.run(spark, head, pages, seen, bloom, cfg,
+        prev.round + 1, warehouse, prev, expectedUrls, robots))
     }
 
-    val lastRound = round - 1
     // arithmetic, not a count job: seen = Σ per-round seen_delta counts
-    // (an O(seen) scan here would grow with crawl age for a summary field)
-    val seenCount = (0 to lastRound)
+    // (an O(seen) scan here would grow with crawl age for a summary field);
+    // the totals count only this invocation's rounds
+    val seenCount = (0 to prev.round)
       .flatMap(Snapshots.readManifest(warehouse, _))
       .map(_.seenDeltaCount).sum
-    CrawlSummary(lastRound, totalFetched, totalErrors, totalDeduped,
-      seenCount, pendingAfter = math.max(state.pending, 0L))
+    CrawlSummary(prev.round, committed.map(_.fetched).sum,
+      committed.map(_.errors).sum, committed.map(_.deduped).sum, seenCount,
+      pendingAfter = math.max(prev.frontierCount, 0L))
   }
 
   /** Snapshot 0: seeds only (mirrors start_urls, PostSpider.py:40).
@@ -134,12 +122,12 @@ object CrawlLoop {
     * plan — and then enter the frontier the way discovered links do
     * ([[CrawlRound.seed]]: robots gate, dedupe on the canonical url, as the
     * oracle simulator's `seen.add` does, and the head/backlog split).
-    * Returns snapshot 0's cumulative Bloom. */
+    * Returns snapshot 0's manifest and Bloom, committed like any round's. */
   private def seedSnapshot(spark: SparkSession, seedUrls: Seq[String],
                            cfg: Crawl.CrawlConfig, warehouse: String,
                            expectedUrls: Long,
                            robots: Map[String, Vector[String]]
-                          ): Array[Array[Byte]] = {
+                          ): (Snapshots.Manifest, Array[Array[Byte]]) = {
     import spark.implicits._
     val canonUdf = udf((u: String) => graft.core.UrlCanon.canonicalize(u))
     val slices = math.max(1, math.min(64, seedUrls.size / 50000 + 1))
@@ -147,14 +135,7 @@ object CrawlLoop {
       .select(canonUdf(col("raw_url")).as("url"), lit(0).as("priority"),
         lit(0).as("depth"), lit("").as("parent_url"),
         lit(0).as("discovered_round"), lit(new Timestamp(0L)).as("warc_ts"))
-    val s = CrawlRound.seed(spark, seeds, cfg, warehouse, expectedUrls, robots)
-    Snapshots.writeBloomShards(warehouse, 0, s.bloom)
-    Snapshots.writeManifest(warehouse, Snapshots.Manifest(0, -1,
-      s.newCount, s.newCount, 0, 0, 0, Nil,
-      headCount = s.newCount - s.backlogCount,
-      backlogPending = s.backlogCount, backlogPhysRows = s.backlogCount,
-      baseRound = -1))
-    s.bloom
+    CrawlRound.seed(spark, seeds, cfg, warehouse, expectedUrls, robots)
   }
 
   /** Final item tables (union of per-round deltas at the latest snapshot). */

@@ -16,7 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * {{{
   * warehouse/
-  *   snap-00000/    written by CrawlRound.seed: the seeds as round 0
+  *   snap-00000/    tables written by CrawlRound.seed: the seeds as
+  *                  round 0 (bloom and manifest committed by CrawlLoop
+  *                  like every round's)
   *     head/          frontier head
   *     host_state/    per-host backlog state; only while some host is
   *                    backlogged (the manifest's backlogPending > 0)
@@ -36,6 +38,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * item tables are views over it at read time — one write per round
   * instead of five. `fetched` and `misses` store no round column:
   * [[readTable]] derives it from the snap dir ([[roundOfFile]]).
+  *
+  * The seed and every round write their tables and return their
+  * [[Manifest]] and delta Bloom; `CrawlLoop` commits each snapshot,
+  * snapshot 0 included, the same way: the delta ORed into the cumulative
+  * Bloom, `bloom*.bin`, then `manifest.json`.
   *
   * Item tables and the seen set are stored as per-round DELTAS: the full
   * table at round k = union of deltas 0..k. At the 10^10-URL design point
@@ -57,6 +64,12 @@ object Snapshots {
                             deduped: Long, lineage: Seq[PartitionLineage],
                             headCount: Long, backlogPending: Long,
                             backlogPhysRows: Long, baseRound: Int)
+
+  /** The state before snapshot 0 ("round −1"): nothing pending, no
+    * backlog, no compacted base. Snapshot 0's previous manifest; never
+    * written. */
+  val EmptyManifest: Manifest =
+    Manifest(-1, -2, 0L, 0L, 0L, 0L, 0L, Nil, 0L, 0L, 0L, -1)
 
   /** Manifest JSON: snake_case keys; a manifest missing a key fails to
     * read. */

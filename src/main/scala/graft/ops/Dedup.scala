@@ -438,7 +438,14 @@ object Dedup {
     * same components as over the all-pairs set when in-bucket members
     * are mutual near-dups (the regime that makes a bucket dense), so the
     * dedup pipeline keeps the same survivors while the operator stays
-    * O(bucket) instead of O(bucket²) on pathological inputs. */
+    * O(bucket) instead of O(bucket²) on pathological inputs.
+    *
+    * Contract with `maxBucket` set: the output is closure-complete for
+    * [[dupClusters]], not pair-complete. In a bucket over the cap only
+    * the min-id → member edges are emitted (cosine-verified like every
+    * pair); a near-dup pair of two other members of that bucket is not in
+    * the output, and the two share a cluster only through the min id.
+    * Callers that need every near-dup pair keep the default. */
   def embeddingNearDup(df: DataFrame, vecCol: String, idCol: String,
                        numPlanes: Int = 12,
                        threshold: Double = 0.95,

@@ -47,7 +47,9 @@ import org.apache.spark.sql.functions._
   *    build, and — only when a host overflows or the backlog is in use —
   *    the backlog delta and host-state upkeep) is likewise off the
   *    critical path; all bookkeeping counts are derived arithmetically
-  *    (pending' = pending - selected + new). A steady round (no
+  *    from the previous round's manifest (pending' = pending - selected +
+  *    new), and the round returns its own manifest — the seed's comes from
+  *    the same arithmetic — for the caller to commit. A steady round (no
   *    overflow, no backlog) runs 17-20 Spark jobs on crawl_deep,
   *    broadcast and shuffle-stage jobs included: fetch 4, expand 3,
   *    delta-bloom 2-4, misses 2, seen-delta 1-2, merge 1-2 (the overflow
@@ -189,35 +191,6 @@ object CrawlRound {
   /** Floor on every Bloom the round sizes from a row count or bound. */
   private val MinBloomItems = 1L << 16
 
-  /** Carried frontier bookkeeping between rounds (persisted in the
-    * snapshot manifest): total pending, head/backlog split, physical
-    * backlog rows (incl. tombstoned), and the last compaction round. */
-  final case class FrontierState(pending: Long, headCount: Long,
-                                 backlogPending: Long, backlogPhysRows: Long,
-                                 baseRound: Int)
-
-  // UDF-facing DTOs (Seq-of-case-class is encoder-friendly)
-  final case class LinkDto(url: String, depth: Int, priority: Int)
-  final case class ProcessedPage(posts: Seq[Crawl.PostItem],
-                                 replies: Seq[Crawl.ReplyItem],
-                                 comments: Seq[Crawl.CommentItem],
-                                 tieba_names: Seq[String],
-                                 links: Seq[LinkDto],
-                                 text: String)
-
-  final case class RoundResult(fetchedCount: Long,
-                               errorCount: Long,
-                               newCount: Long,
-                               dedupedCount: Long,
-                               state: FrontierState,
-                               deltaBloom: Option[Array[Array[Byte]]],
-                               lineage: Seq[PartitionLineage])
-
-  /** Snapshot 0's outcome: the seeds entered, how many of them went to the
-    * backlog, and their Bloom — snapshot 0's cumulative filter. */
-  final case class SeedResult(newCount: Long, backlogCount: Long,
-                              bloom: Array[Array[Byte]])
-
   def hostBucketOf(hostHash: Long): Int =
     (((hostHash % NumHostBuckets) + NumHostBuckets) % NumHostBuckets).toInt
 
@@ -287,12 +260,14 @@ object CrawlRound {
 
   /** Runs the round and writes `fetched` / `misses` / `head` /
     * `backlog_add` / `backlog_rm` / `host_state` / `seen_delta` into the
-    * round's snapshot dir (manifest is the caller's commit). `state` lets
-    * all output counts be derived without count jobs over big tables;
-    * `expectedUrls` sizes the delta Bloom (same geometry as the cumulative
-    * filter so the driver can OR-merge). Every cached frame and side job
-    * belongs to a [[RoundScope]]: whether the round returns or throws, no
-    * cache and no writer outlives this call. */
+    * round's snapshot dir. `prev` is the previous round's manifest, from
+    * which every count of this round's manifest follows arithmetically
+    * (no count jobs over big tables). Returns that manifest, uncommitted
+    * (the caller's commit writes it), and the round's delta Bloom, built
+    * with `bloom`'s geometry from `expectedUrls` so the caller can OR it
+    * into the cumulative filter (all-zero when nothing is new). Every
+    * cached frame and side job belongs to a [[RoundScope]]: whether the
+    * round returns or throws, no cache and no writer outlives this call. */
   def run(spark: SparkSession,
           head: DataFrame,
           pages: DataFrame,
@@ -301,11 +276,12 @@ object CrawlRound {
           cfg: Crawl.CrawlConfig,
           round: Int,
           warehouse: String,
-          state: FrontierState,
+          prev: Snapshots.Manifest,
           expectedUrls: Long,
-          robots: Map[String, Vector[String]] = Map.empty): RoundResult =
+          robots: Map[String, Vector[String]] = Map.empty
+         ): (Snapshots.Manifest, Array[Array[Byte]]) =
     RoundScope(spark.sparkContext, round) { scope =>
-      val p = new Phases(spark, cfg, round, warehouse, state, scope)
+      val p = new Phases(spark, cfg, round, warehouse, prev, scope)
       val sel = p.select(head, pages)
       val fetch = p.fetchExtract(sel)
       val exp = p.expandConfirm(fetch.fetched, seen, bloom, expectedUrls,
@@ -320,15 +296,17 @@ object CrawlRound {
     * fetch: `seeds` (canonical `url` plus the link columns) enter the
     * frontier the way discovered links do — the round's link dedupe,
     * new-entry side jobs and tier merge. Nothing is seen yet, so there is
-    * no probe and no confirm, and no filter to broadcast. The delta Bloom
-    * is built with the cumulative filter's geometry, so it IS snapshot
-    * 0's cumulative filter. The manifest is the caller's commit. */
+    * no probe and no confirm, and no filter to broadcast. Returns what
+    * [[run]] returns: snapshot 0's uncommitted manifest, from
+    * [[Snapshots.EmptyManifest]] by the round's own arithmetic, and the
+    * seeds' Bloom in the cumulative filter's geometry. */
   def seed(spark: SparkSession, seeds: DataFrame, cfg: Crawl.CrawlConfig,
            warehouse: String, expectedUrls: Long,
-           robots: Map[String, Vector[String]]): SeedResult =
+           robots: Map[String, Vector[String]]
+          ): (Snapshots.Manifest, Array[Array[Byte]]) =
     RoundScope(spark.sparkContext, 0) { scope =>
-      val p = new Phases(spark, cfg, 0, warehouse,
-        FrontierState(0L, 0L, 0L, 0L, -1), scope)
+      val p = new Phases(spark, cfg, 0, warehouse, Snapshots.EmptyManifest,
+        scope)
       val exp = scope.phase("expand")(p.newEntryJobs(
         p.dedupeLinks(seeds, robots), expectedUrls,
         ShardedBloom.numShardsFor(expectedUrls)))
@@ -338,10 +316,11 @@ object CrawlRound {
       // no backlog yet, so no refill: this only rewrites the head when
       // the seeds overflow a host
       val refill = p.refillReconcile(merge)
-      val backlogCount =
+      val overflow =
         scope.phase("side-writes")(p.backlogWrites(merge, refill))
-      val (bloom, newCount) = scope.await(exp.deltaBloom)
-      SeedResult(newCount, scope.await(backlogCount), bloom)
+      val (delta, newCount) = scope.await(exp.deltaBloom)
+      (p.nextManifest(selected = 0L, fetched = 0L, errors = 0L, deduped = 0L,
+        newCount, scope.await(overflow), removed = 0L, lineage = Nil), delta)
     }
 
   private val feColsC = TieredFrontier.feCols.map(col)
@@ -373,7 +352,7 @@ object CrawlRound {
 
   private final class Phases(spark: SparkSession, cfg: Crawl.CrawlConfig,
                              round: Int, warehouse: String,
-                             state: FrontierState, scope: RoundScope) {
+                             prev: Snapshots.Manifest, scope: RoundScope) {
     private val headCap = cfg.perHostBudget * TieredFrontier.HeadFactor
 
     private def path(table: String): String =
@@ -422,21 +401,17 @@ object CrawlRound {
       * of the broadcast — correct, and the Bloom oversize is capped by
       * HeadFactor. */
     def fetchExtract(sel: Selection): Fetch = scope.phase("fetch") {
-      val selectedBloom =
-        if (state.headCount > BroadcastRowGate)
-          Some(bloomOver(sel.selected, state.headCount, 0.01))
-        else None
+      val underGate = prev.headCount <= BroadcastRowGate
+      val selectedBloom = Option.when(!underGate)(
+        bloomOver(sel.selected, prev.headCount, 0.01))
       val hits = fetchJoin(sel.pages,
         sel.selected.select("host_bucket", "url", "url_hash", "host",
           "host_hash", "depth", "priority"),
-        state.headCount, selectedBloom, withText = cfg.verifyText)
+        prev.headCount, selectedBloom, withText = cfg.verifyText)
 
       val cfgB = spark.sparkContext.broadcast(cfg)
-      val processUdf = udf { (url: String, html: Array[Byte]) =>
-        val o = Crawl.process(url, html, cfgB.value)
-        ProcessedPage(o.posts, o.replies, o.comments, o.tiebaNames,
-          o.links.map(l => LinkDto(l.url, l.depth, l.priority)), o.text)
-      }
+      val processUdf = udf((url: String, html: Array[Byte]) =>
+        Crawl.process(url, html, cfgB.value))
       // critical-path job #1: scan+join+extract, written exactly once; every
       // downstream consumer re-reads this bounded working set from parquet.
       // (Measured alternative, rejected: persisting the pre-write DF and
@@ -477,9 +452,7 @@ object CrawlRound {
         // makes it exact — a 64-bit collision between two selected urls
         // must not erase a miss row from the fetch log.
         val fetchedHashes = fetched.select("url_hash", "url")
-        val side =
-          if (state.headCount <= BroadcastRowGate) broadcast(fetchedHashes)
-          else fetchedHashes
+        val side = if (underGate) broadcast(fetchedHashes) else fetchedHashes
         sel.selected
           .join(side, Seq("url_hash", "url"), "left_anti")
           .select(col("url"), col("url_hash"), col("host"), col("depth"))
@@ -613,7 +586,7 @@ object CrawlRound {
         // cached: a tiny parquet table, cheaper to re-read than to cache
         // and scan.
         val prevHostState =
-          if (state.backlogPending <= 0) None
+          if (prev.backlogPending <= 0) None
           else Some(TieredFrontier.readHostState(spark, warehouse, round - 1))
         val (newBetter, newWorse) = prevHostState match {
           case None => (newEntries, None)
@@ -733,7 +706,7 @@ object CrawlRound {
           .distinct().collect().map(_.getInt(0)).toSeq.sorted
         if (buckets.isEmpty) None
         else TieredFrontier.readBacklogPending(spark, warehouse,
-          state.baseRound, round - 1, Some(buckets)).map(pick(_, rn, m.newWorse))
+          prev.baseRound, round - 1, Some(buckets)).map(pick(_, rn, m.newWorse))
       }
 
       // Reconcile the optimistic head write. Three cases:
@@ -861,45 +834,55 @@ object CrawlRound {
       backlogWrite
     }
 
-    /** The round's side writes, then the bookkeeping — all counts
-      * arithmetic, no count jobs on big tables. */
-    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge,
-                   r: Refill): RoundResult = scope.phase("side-writes") {
-      val backlogWrite = backlogWrites(m, r)
+    /** The round's side writes, then its manifest and delta Bloom — all
+      * counts arithmetic, no count jobs on big tables. */
+    def sideWrites(fetch: Fetch, exp: Expansion, m: Merge, r: Refill
+                  ): (Snapshots.Manifest, Array[Array[Byte]]) =
+      scope.phase("side-writes") {
+        val backlogWrite = backlogWrites(m, r)
 
-      // selected + remaining = head (exact manifest arithmetic)
-      val selectedCount = state.headCount - m.remainingCount
-      val lineageRows = scope.await(fetch.lineage)
-      val fetchedCount = lineageRows.map(_._2).sum
-      val discoveredCount = lineageRows.map(_._3).sum
-      // Contract: `pages` has unique (host_bucket, url) rows — the corpus
-      // writer guarantees it and the generator derives urls from unique ids.
-      // A duplicate page row would multiply join hits and drive this
-      // negative, silently corrupting the driver loop's termination
-      // arithmetic, so fail loudly instead.
-      val errorCount = selectedCount - fetchedCount
-      require(errorCount >= 0,
-        s"round $round: fetched ($fetchedCount) > selected ($selectedCount); " +
-          "pages table violates the unique-(host_bucket,url) contract")
-      val (deltaShards, newCount) = scope.await(exp.deltaBloom)
-      val overflowCount = scope.await(backlogWrite)
-      val rmCount = r.picks.fold(0L)(p => scope.await(p.rmCount))
-      val dedupedCount = discoveredCount - newCount
-      // overflowCount = rows added to backlog; rmCount = rows promoted out
-      val pending = state.pending - selectedCount + newCount
-      val backlogPending = state.backlogPending + overflowCount - rmCount
-      val newState = FrontierState(pending, pending - backlogPending,
-        backlogPending, state.backlogPhysRows + overflowCount, state.baseRound)
+        // selected + remaining = head (exact manifest arithmetic)
+        val selectedCount = prev.headCount - m.remainingCount
+        val lineageRows = scope.await(fetch.lineage)
+        val fetchedCount = lineageRows.map(_._2).sum
+        val discoveredCount = lineageRows.map(_._3).sum
+        // Contract: `pages` has unique (host_bucket, url) rows — the corpus
+        // writer guarantees it and the generator derives urls from unique
+        // ids. A duplicate page row would multiply join hits and drive this
+        // negative, silently corrupting the driver loop's termination
+        // arithmetic, so fail loudly instead.
+        val errorCount = selectedCount - fetchedCount
+        require(errorCount >= 0,
+          s"round $round: fetched ($fetchedCount) > selected ($selectedCount); " +
+            "pages table violates the unique-(host_bucket,url) contract")
+        val (delta, newCount) = scope.await(exp.deltaBloom)
+        val dedupedCount = discoveredCount - newCount
+        val lineage = lineageRows.map { case (pid, pages, _) =>
+          PartitionLineage(round, pid, pages, 0L, 0L) } :+
+          PartitionLineage(round, -1, 0L, dedupedCount, errorCount)
 
-      val lineage = lineageRows.map { case (pid, pages, _) =>
-        PartitionLineage(round, pid, pages, 0L, 0L) } :+
-        PartitionLineage(round, -1, 0L, dedupedCount, errorCount)
+        // the remaining side writes (misses, seen_delta, head, host_state)
+        // are awaited by the scope before run() returns — the caller's
+        // manifest commit makes this round visible to resume
+        (nextManifest(selectedCount, fetchedCount, errorCount, dedupedCount,
+          newCount, scope.await(backlogWrite),
+          r.picks.fold(0L)(p => scope.await(p.rmCount)), lineage), delta)
+      }
 
-      // the remaining side writes (misses, seen_delta, head, host_state)
-      // are awaited by the scope before run() returns — the caller's
-      // manifest commit makes this round visible to resume
-      RoundResult(fetchedCount, errorCount, newCount, dedupedCount, newState,
-        Option.when(newCount > 0)(deltaShards), lineage)
+    /** This round's manifest from the previous one and the round's counts:
+      * `overflow` rows were added to the backlog and `removed` promoted out
+      * of it; pending' = pending − selected + new. */
+    def nextManifest(selected: Long, fetched: Long, errors: Long,
+                     deduped: Long, newCount: Long, overflow: Long,
+                     removed: Long, lineage: Seq[PartitionLineage]
+                    ): Snapshots.Manifest = {
+      val pending = prev.frontierCount - selected + newCount
+      val backlogPending = prev.backlogPending + overflow - removed
+      Snapshots.Manifest(round, round - 1, pending, newCount, fetched, errors,
+        deduped, lineage, headCount = pending - backlogPending,
+        backlogPending = backlogPending,
+        backlogPhysRows = prev.backlogPhysRows + overflow,
+        baseRound = prev.baseRound)
     }
   }
 }

@@ -99,7 +99,7 @@ object ReferenceSimulator {
             posts ++= out.posts
             replies ++= out.replies
             comments ++= out.comments
-            out.tiebaNames.foreach(n => tiebaNames += ((e.url, n)))
+            out.tieba_names.foreach(n => tiebaNames += ((e.url, n)))
             out.links.foreach { l =>
               val e = entryOf(l.url, l.priority, l.depth, page.warcTs.getTime)
               if (allowed(e.url)) discovered += e

@@ -59,12 +59,11 @@ class RoundFailureSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val pages = CorpusWriter.read(spark, pagesPath)
     val wh = TestSpark.tmpDir("fail-wh")
-    // snapshot 0 only: the seed head, host_state and manifest
+    // snapshot 0 only: the seed head, seen_delta and manifest (these
+    // seeds overflow no host, so there is no host_state)
     CrawlLoop.run(spark, pages, seeds, cfg.copy(maxRounds = 0), wh,
       expectedUrls = 1L << 16)
     val m0 = Snapshots.readManifest(wh, 0).get
-    val state = CrawlRound.FrontierState(m0.frontierCount, m0.headCount,
-      m0.backlogPending, m0.backlogPhysRows, m0.baseRound)
     // every bit set: each discovered link is a suspect, so the exact
     // confirm must scan `seen`
     val bloom = ShardedBloom.empty(1L << 16)
@@ -82,7 +81,7 @@ class RoundFailureSpec extends AnyFunSuite {
     val e = intercept[Exception] {
       Await.result(Future(CrawlRound.run(spark,
         TieredFrontier.readHead(spark, wh, 0), pages, seen, bloom, cfg, 1, wh,
-        state, 1L << 16))(ExecutionContext.global), 5.minutes)
+        m0, 1L << 16))(ExecutionContext.global), 5.minutes)
     }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("seen scan failed")),

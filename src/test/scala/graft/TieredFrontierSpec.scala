@@ -9,6 +9,7 @@ import graft.corpus.{CorpusWriter, SyntheticWeb, WebSpec}
 import graft.driver.CrawlLoop
 import graft.frontier.{FrontierEntry, Snapshots, TieredFrontier}
 import graft.sim.ReferenceSimulator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,6 +83,32 @@ class TieredFrontierSpec extends AnyFunSuite {
     assert(m.frontierCount == m.headCount + m.backlogPending)
     val head = TieredFrontier.readHead(spark, wh, mid)
     assert(head.count() == m.headCount)
+  }
+
+  test("every committed manifest equals a recount of its snapshot") {
+    val spark = TestSpark.spark
+    val last = Snapshots.latestCommittedRound(wh).get
+    // rows per round of the per-round delta tables, one job each
+    def perRound(df: DataFrame): Map[Int, Long] =
+      df.groupBy("round").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val fetched = perRound(Snapshots.readTable(spark, wh, "fetched", last).get)
+    val misses = perRound(Snapshots.readTable(spark, wh, "misses", last).get)
+    val seenDelta = perRound(Snapshots.readTable(spark, wh, "seen_delta", last)
+      .get.withColumn("round", Snapshots.roundOfFile))
+    for (k <- 0 to last) {
+      val m = Snapshots.readManifest(wh, k).get
+      val at = s"round $k: $m"
+      assert(Snapshots.readTable(spark, wh, "frontier", k).fold(0L)(_.count())
+        == m.frontierCount, at)
+      assert(TieredFrontier.readHead(spark, wh, k).count() == m.headCount, at)
+      assert(TieredFrontier.readBacklogPending(spark, wh, m.baseRound, k)
+        .fold(0L)(_.count()) == m.backlogPending, at)
+      assert(seenDelta.getOrElse(k, 0L) == m.seenDeltaCount, at)
+      assert(fetched.getOrElse(k, 0L) == m.fetched, at)
+      assert(misses.getOrElse(k, 0L) == m.errors, at)
+      assert(m.lineage.map(_.fetched).sum == m.fetched, at)
+    }
   }
 
   test("seed snapshot splits head/backlog when seeds exceed one host's head capacity") {
